@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every declared query at SPARK_GRAFT_SF_DIR,
@@ -43,13 +43,48 @@ object Bench {
   val ProbeRefSec = HostProbe.ProbeRefSec
   val ProbeHealthyRatio = HostProbe.HealthyRatio
 
-  final case class QStat(min: Double, med: Double, runs: Int, dirty: Int, clean: Int) {
-    def degraded: Boolean = clean < 2
-    /** More clean evidence wins; with equal evidence the lower median
-      * (quieter window) wins. */
+  /** One query's timing; `error` is set when a run threw, and then
+    * `min`/`med` carry no time. */
+  final case class QStat(min: Double, med: Double, runs: Int, dirty: Int, clean: Int,
+                         error: Option[String] = None) {
+    def failed: Boolean = error.nonEmpty
+    def degraded: Boolean = !failed && clean < 2
+    /** A run that completed beats one that threw; then more clean
+      * evidence wins; with equal evidence the lower median (quieter
+      * window) wins. */
     def betterOf(o: QStat): QStat =
-      if (o.clean > clean || (o.clean == clean && o.med < med)) o else this
+      if (o.failed) this
+      else if (failed || o.clean > clean || (o.clean == clean && o.med < med)) o
+      else this
   }
+
+  /** Seconds of one noop-sink run of a query, or the error it threw. */
+  def timeOnce(spark: SparkSession, sfDir: String, name: String,
+               fn: (SparkSession, String) => DataFrame): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      Right((System.nanoTime() - t0) / 1e9)
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      Left(s"${e.getClass.getSimpleName}: ${e.getMessage}")
+    }
+  }
+
+  /** `(total, total of mins)` over the queries that completed: a query
+    * that threw has no time to add. */
+  def totals(stats: Seq[QStat]): (Double, Double) = {
+    val ok = stats.filterNot(_.failed)
+    (ok.map(_.med).sum, ok.map(_.min).sum)
+  }
+
+  /** A JSON string literal. */
+  def jsonString(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => "\\" + f"u${c.toInt}%04x"
+    case c => c.toString
+  }.mkString("\"", "", "\"")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -65,18 +100,11 @@ object Bench {
     // untimed warmup: absorb session/codegen/first-scan startup so the
     // alphabetically-first query isn't charged ~8 s of JVM warmup
     try {
-      spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000)
+      Tables.lineitem(spark, sfDir).limit(1000)
         .write.format("noop").mode("overwrite").save()
     } catch { case _: Throwable => () }
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
+    def timeOnce(name: String, fn: (SparkSession, String) => DataFrame): Either[String, Double] =
+      Bench.timeOnce(spark, sfDir, name, fn)
     // steady-state timing with stall defense. This host shows bursty
     // multi-MINUTE hypervisor CPU-steal windows (/proc/stat steal grows
     // in steps; cgroup throttling is zero, so the noise is external).
@@ -145,7 +173,7 @@ object Bench {
         System.err.println(f"[bench] host degraded (steal ${frac * 100}%.1f%%, probe baseline ${probeBaseline()}%.3f s) — waiting it out")
       }
     }
-    def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): QStat = {
+    def measure(name: String, fn: (SparkSession, String) => DataFrame): QStat = {
       var clean = Vector.empty[Double]
       var all = Vector.empty[Double]
       var dirtyRuns = 0
@@ -156,7 +184,12 @@ object Bench {
         if (dirtyRuns > 0 || ratioSuspect(clean)) waitForCleanHost(20000)
         attempts += 1
         val s0 = stealJiffies()
-        val t = timeOnce(name, fn)
+        val t = timeOnce(name, fn) match {
+          case Right(sec) => sec
+          case Left(error) =>
+            // a query that throws is failed, not a fast run
+            return QStat(Double.NaN, Double.NaN, attempts, dirtyRuns, clean.size, Some(error))
+        }
         val s1 = stealJiffies()
         all = all :+ t
         val stolen = if (s0 < 0 || s1 < 0) 0.0 else (s1 - s0) * jiffySec / (t * nCores)
@@ -222,8 +255,7 @@ object Bench {
     // inflates BOTH runs, so the min keeps the signal and sheds the
     // jitter.
     def sentinelTick(pos: Int): Unit = sentinel.foreach { case (sn, sfn) =>
-      val t = math.min(timeOnce(sn, sfn), timeOnce(sn, sfn))
-      sentinelSeries += ((pos, t))
+      for (a <- timeOnce(sn, sfn); b <- timeOnce(sn, sfn)) sentinelSeries += ((pos, math.min(a, b)))
     }
     // untimed sentinel warm-up: tick 0 must measure the HOST, not the
     // sentinel query's own codegen warm-up — an inflated first tick
@@ -303,14 +335,14 @@ object Bench {
     }
     if (retryPos > ordered.size) sentinelTick(retryPos)
     val finalSpans = dirtySpans()
-    def obj(f: QStat => String): String =
-      results.map { case (n, st, _) => "\"" + n + "\":" + f(st) }.mkString("{", ",", "}")
+    def obj(f: QStat => String, of: Seq[(String, QStat, Int)] = results): String =
+      of.map { case (n, st, _) => "\"" + n + "\":" + f(st) }.mkString("{", ",", "}")
+    val (ok, failed) = results.partition(!_._2.failed)
     val posJson = results.map { case (n, _, p) => "\"" + n + "\":" + p }
       .mkString("{", ",", "}")
     val spansJson = finalSpans.map { case (s, e) => s"[$s,$e]" }
       .mkString("[", ",", "]")
-    val total = results.map(_._2.med).sum
-    val totalMin = results.map(_._2.min).sum
+    val (total, totalMin) = totals(results.map(_._2))
     val nDegraded = results.count(_._2.degraded)
     val probeRatio = probeBestSession / ProbeRefSec
     val hostDegraded = probeRatio > ProbeHealthyRatio
@@ -325,13 +357,13 @@ object Bench {
         sentinelSeries.last._2 / sentinelSeries.map(_._2).min else 1.0
       f"""{"name":"$sn","series_pos_sec":$series,"last_vs_best":$drift%.3f,"gc_every":$gcEvery}"""
     }.getOrElse("null")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","estimator":"median_of_best3_steal_filtered","value_min":$totalMin,"host":$host,"sentinel":$sentinelJson,"dirty_spans":$spansJson,"sentinel_hot_factor":$HotFactor,"query_pos":$posJson,"queries":${obj(_.med.toString)},"queries_min":${obj(_.min.toString)},"query_runs":${obj(_.runs.toString)},"query_dirty":${obj(_.dirty.toString)},"query_clean":${obj(_.clean.toString)},"streams":$streams,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","estimator":"median_of_best3_steal_filtered","value_min":$totalMin,"host":$host,"sentinel":$sentinelJson,"dirty_spans":$spansJson,"sentinel_hot_factor":$HotFactor,"query_pos":$posJson,"queries":${obj(_.med.toString, ok)},"queries_min":${obj(_.min.toString, ok)},"failed":${obj(st => jsonString(st.error.get), failed)},"query_runs":${obj(_.runs.toString)},"query_dirty":${obj(_.dirty.toString)},"query_clean":${obj(_.clean.toString)},"streams":$streams,"sf":"$sfDir"}"""
     Files.writeString(Paths.get("bench_out.json"), full + "\n")
     // The LAST stdout line is a compact (<500 B) summary: the driver
     // captures only a tail of stdout, and r5's single 11 KB line was
     // truncated into unparseable ("parsed": null). Per-query detail
     // lives in bench_out.json; this line always parses.
-    val summary = f"""{"metric":"total","value":$total%.2f,"unit":"sec","value_min":$totalMin%.2f,"n_queries":${results.size},"estimator":"median_of_best3_steal_filtered","host":$host,"detail":"bench_out.json","sf":"$sfDir"}"""
+    val summary = f"""{"metric":"total","value":$total%.2f,"unit":"sec","value_min":$totalMin%.2f,"n_queries":${results.size},"n_failed":${failed.size},"estimator":"median_of_best3_steal_filtered","host":$host,"detail":"bench_out.json","sf":"$sfDir"}"""
     println(summary)
     spark.stop()
   }

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** SparkSession factory for the engine.
@@ -24,8 +28,32 @@ object Engine {
     * pinned to a fresh per-JVM temp dir instead of the default
     * `$PWD/spark-warehouse`, so saveAsTable works no matter which cwd
     * the harness launches from and never litters the repo. */
-  private lazy val warehouseDir: String =
-    java.nio.file.Files.createTempDirectory("graft_wh").toString
+  private lazy val warehouseDir: String = tempDir("graft_wh")
+
+  /** Directories to delete, with their contents, when the JVM exits. */
+  private lazy val deleteAtExit = {
+    val dirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+    sys.addShutdownHook(dirs.forEach(d => deleteTree(d)))
+    dirs
+  }
+
+  /** A fresh temporary directory that lives as long as the JVM: the
+    * engine's per-JVM state (warehouse, fixture memo) sits in these, and
+    * none outlives the process that made it. */
+  private[graft] def tempDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    deleteAtExit.add(dir)
+    dir.toString
+  }
+
+  /** Best effort: runs at exit, where a failure has nowhere to go. */
+  private def deleteTree(root: Path): Unit =
+    try {
+      val paths = Files.walk(root)
+      try paths.sorted(java.util.Comparator.reverseOrder[Path]()).forEach { p =>
+        try Files.deleteIfExists(p) catch { case NonFatal(_) => () }
+      } finally paths.close()
+    } catch { case NonFatal(_) => () }
 
   /** Apply engine config to an arbitrary builder (shared by Verify/Bench
     * mains and tests so every session behaves identically). */

@@ -25,7 +25,7 @@ object GenCopies {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if (!Files.exists(Paths.get(s"$out/documents.parquet"))) {
-      val docs = spark.read.parquet(s"$base/documents.parquet")
+      val docs = Tables.documents(spark, base)
       (kFrom until kFrom + n).map { k =>
         docs.select(
           (col("doc_id") + lit((k - kFrom) * 10000000L)).as("doc_id"),

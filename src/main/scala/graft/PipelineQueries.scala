@@ -40,7 +40,7 @@ object PipelineQueries {
     if (prior != null) prior.join()
     else {
       try {
-        val work = java.nio.file.Files.createTempDirectory("graft_fx").toString
+        val work = Engine.tempDir("graft_fx")
         build(work)
         fresh.complete(work)
       } catch {

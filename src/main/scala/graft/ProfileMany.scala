@@ -65,7 +65,7 @@ object ProfileMany {
       }
     })
     // warmup scan
-    try spark.read.parquet(s"$sfDir/lineitem.parquet").limit(100)
+    try Tables.lineitem(spark, sfDir).limit(100)
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
     names.foreach { name =>

@@ -80,7 +80,7 @@ object ScaleProbe {
     // disjoint from EVERY timed fixture's (nothing is accidentally shared)
     def gen(nCopies: Int, kFrom: Int, out: String): Unit =
       if (!Files.exists(Paths.get(s"$out/documents.parquet"))) {
-        val docs = spark.read.parquet(s"$base/documents.parquet")
+        val docs = Tables.documents(spark, base)
         (kFrom until kFrom + nCopies).map { k =>
           docs.select(
             (col("doc_id") + lit((k - kFrom) * 10000000L)).as("doc_id"),
@@ -98,7 +98,7 @@ object ScaleProbe {
         // the sf0.1 table, far under tau 0.99 — so caught mass grows
         // ~C×, the honest shape. (id offsets are multiples of 25, so
         // each copy plants the same clone density.)
-        val emb = spark.read.parquet(s"$base/embeddings.parquet")
+        val emb = Tables.embeddings(spark, base)
         (kFrom until kFrom + nCopies).map { k =>
           val sh = (k - kFrom) % 64
           emb.select(
@@ -126,17 +126,17 @@ object ScaleProbe {
           (0 until nCopies).map { i =>
             keyCols.foldLeft(df)((d, c) => d.withColumn(c, col(c) + lit(i * OFF)))
           }.reduce(_ unionByName _)
-        copies(spark.read.parquet(s"$base/orders.parquet"),
+        copies(Tables.orders(spark, base),
             Seq("o_orderkey", "o_custkey"))
           .write.mode("overwrite").parquet(s"$out/orders.parquet")
-        copies(spark.read.parquet(s"$base/customer.parquet"), Seq("c_custkey"))
+        copies(Tables.customer(spark, base), Seq("c_custkey"))
           .write.mode("overwrite").parquet(s"$out/customer.parquet")
-        copies(spark.read.parquet(s"$base/lineitem.parquet"), Seq("l_orderkey"))
+        copies(Tables.lineitem(spark, base), Seq("l_orderkey"))
           .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
         copies(Tables.events(spark, base), Seq("user_id", "event_id"))
           .write.mode("overwrite").parquet(s"$out/events.parquet")
         Seq("nation", "region", "part", "supplier").foreach { t =>
-          spark.read.parquet(s"$base/$t.parquet")
+          Tables.table(spark, base, t)
             .write.mode("overwrite").parquet(s"$out/$t.parquet")
         }
       }

@@ -1,7 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Table layer over the driver's deterministic parquet testdata
   * (`/root/testdata/sf*` — see TESTDATA.md): TPC-H-ish star schema plus an
@@ -14,6 +17,13 @@ import org.apache.spark.sql.functions._
   * footer schema discovery, which is also what a 1000-executor cluster
   * wants (no driver-side catalog bottleneck, columnar at rest, min/max
   * page stats for predicate pushdown).
+  *
+  * Each table resolves once per session: the first [[table]] call reads
+  * the parquet footer (one Spark job) and later calls reuse that schema
+  * (no job), as a catalog table reuses its declared schema. Only the
+  * `StructType` is held — never rows, a cached DataFrame or a file
+  * index — so every call still lists the files and builds a fresh
+  * relation, and every scan runs when the query runs.
   */
 object Tables {
 
@@ -21,11 +31,32 @@ object Tables {
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
+  /** Footer schema per session and table path. The session is part of
+    * the key because the inferred schema follows session SQL conf
+    * (nanosAsLong reads `events.ts` as Long). The key is weak: the map
+    * never keeps a session alive, and a stopped session's entries go
+    * when it is collected. */
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, StructType]]()
+
+  private def schemasOf(spark: SparkSession): ConcurrentHashMap[String, StructType] =
+    schemas.synchronized(schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap()))
+
   /** Generic scan. Filters/projections applied downstream reach the
     * parquet reader via Catalyst pushdown — verified in plans as
-    * PushedFilters/ReadSchema. */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    * PushedFilters/ReadSchema. Every call returns a new relation with
+    * fresh expression ids, so self-joins resolve. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val known = schemasOf(spark)
+    known.get(path) match {
+      case null =>
+        val df = spark.read.parquet(path)
+        known.putIfAbsent(path, df.schema)
+        df
+      case schema => spark.read.schema(schema).parquet(path)
+    }
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "nation")
