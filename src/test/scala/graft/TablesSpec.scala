@@ -75,18 +75,12 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("only metadata is held: files added after resolution are read") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tables").toString
-    try {
-      val part = Tables.nation(spark, sf)
-      part.write.parquet(s"$dir/nation.parquet")
-      val n = Tables.nation(spark, dir).count()
-      part.write.mode("append").parquet(s"$dir/nation.parquet")
-      assert(Tables.nation(spark, dir).count() == 2 * n)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala.toSeq
-        .reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
+    val dir = Engine.tempDir("graft_tables")
+    val part = Tables.nation(spark, sf)
+    part.write.parquet(s"$dir/nation.parquet")
+    val n = Tables.nation(spark, dir).count()
+    part.write.mode("append").parquet(s"$dir/nation.parquet")
+    assert(Tables.nation(spark, dir).count() == 2 * n)
   }
 
   test("no src/main read of a testdata table bypasses Tables") {
