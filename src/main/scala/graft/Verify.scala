@@ -105,21 +105,23 @@ object Verify {
     pool.shutdown()
     import scala.jdk.CollectionConverters._
     val sorted = results.asScala.toSeq.sortBy(_._1)
-    val ok = sorted.count(_._2.isDefined)
-    val fail = sorted.size - ok
+    // `executed` means the query ran and its dump was written; whether
+    // the rows match the oracle is for tools/check_oracle.py to say
+    val executed = sorted.count(_._2.isDefined)
+    val fail = sorted.size - executed
     // ONE bare machine-readable JSON line as the last stdout, mirroring
     // Bench (whose line the driver parses every round), plus a file copy
     // in the dump dir and repo cwd — three paths to the same handshake.
     val qs = sorted.map { case (name, r) =>
-      q(name) + ":" + r.map(n => s"""{"ok":true,"rows":$n}""").getOrElse("""{"ok":false}""")
+      q(name) + ":" + r.map(n => s"""{"executed":true,"rows":$n}""").getOrElse("""{"executed":false}""")
     }.mkString("{", ",", "}")
-    val json = s"""{"verify":"done","ok":$ok,"failed":$fail,"sf":${q(sfDir)},"queries":$qs}"""
+    val json = s"""{"verify":"done","executed":$executed,"failed":$fail,"sf":${q(sfDir)},"queries":$qs}"""
     Files.writeString(Paths.get(s"$outDir/verify_result.json"), json + "\n")
     try Files.writeString(Paths.get("verify_out.json"), json + "\n")
     catch { case _: Throwable => () }
     Files.writeString(Paths.get(s"$outDir/verify_finished.txt"),
       java.time.Instant.now().toString + "\n")
-    System.err.println(s"[verify] done: $ok ok, $fail failed -> $outDir")
+    System.err.println(s"[verify] done: $executed executed, $fail failed -> $outDir")
     println(json)
     spark.stop()
   }

@@ -832,10 +832,12 @@ case class MrPass(child: Expression, a: Int) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Session extensions: registers the engine's native functions.
+/** Session extensions: registers the engine's native functions and the
+  * small-scan planner strategy ([[SmallScanStrategy]]).
   * Installed by Engine via `SparkSession.builder.withExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectPlannerStrategy(SmallScanStrategy)
     ext.injectFunction((
       new FunctionIdentifier("egcd90"),
       new ExpressionInfo(classOf[Egcd90].getName, "egcd90"),

@@ -59,7 +59,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("q156 star join: all dims broadcast, both filters pushed to scans") {
-    val df = run("q156_star_join")
+    val df = PlanAtScale.planned(spark)(run("q156_star_join"))
     val plan = df.queryExecution.executedPlan.toString
     assert("BroadcastHashJoin".r.findAllIn(plan).size >= 4,
       "part, customer, nation, region must all broadcast")

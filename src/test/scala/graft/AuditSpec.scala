@@ -13,8 +13,9 @@ class AuditSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Engine.session("test")
   val sf = "/root/testdata/sf0.001"
 
-  private def executed(name: String) =
+  private def executed(name: String) = PlanAtScale(spark) {
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+  }
 
   test("q93 containment: flags only one-way-covered pairs, arithmetic exact, no cartesian") {
     val rows = SparkEntry.queries("q93_containment_dup")(spark, sf).collect()

@@ -12,8 +12,9 @@ class BehaviorSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Engine.session("test")
   val sf = "/root/testdata/sf0.001"
 
-  private def executed(name: String) =
+  private def executed(name: String) = PlanAtScale(spark) {
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+  }
 
   test("q98 cohort retention: offset-0 diagonal counts every user exactly once") {
     import org.apache.spark.sql.functions.col

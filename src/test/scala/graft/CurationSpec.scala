@@ -13,8 +13,9 @@ class CurationSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Engine.session("test")
   val sf = "/root/testdata/sf0.001"
 
-  private def executed(name: String) =
+  private def executed(name: String) = PlanAtScale(spark) {
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+  }
 
   test("q78 repetition: ratio bounded, flag consistent with threshold") {
     val rows = SparkEntry.queries("q78_repetition_filter")(spark, sf).collect()

@@ -24,7 +24,7 @@ class FeatureQueriesSpec extends AnyFunSuite {
     // lag window, running-sum window, per-(user, session) agg and per-user
     // agg all cluster on user_id — a second hash exchange would mean the
     // gaps-and-islands rewrite lost its co-partitioning at 100 TB
-    val df = SparkEntry.queries("q50_sessionize")(spark, sf)
+    val df = PlanAtScale.planned(spark)(SparkEntry.queries("q50_sessionize")(spark, sf))
     val n = hashShuffles(df)
     assert(n == 1, s"expected 1 hash shuffle, got $n:\n${df.queryExecution.executedPlan}")
   }
@@ -43,7 +43,8 @@ class FeatureQueriesSpec extends AnyFunSuite {
 
   test("q51 hashSplit is a pure key function: stable across runs, ~75/12.5/12.5, narrow") {
     import spark.implicits._
-    val d = hashSplit(Tables.documents(spark, sf), org.apache.spark.sql.functions.col("doc_id"))
+    val d = PlanAtScale.planned(spark)(
+      hashSplit(Tables.documents(spark, sf), org.apache.spark.sql.functions.col("doc_id")))
     assert(hashShuffles(d) == 0, "split assignment must not shuffle")
     val counts = d.groupBy("split").count().as[(String, Long)].collect().toMap
     assert(counts.keySet == Set("train", "val", "test"), counts.toString)
@@ -62,7 +63,7 @@ class FeatureQueriesSpec extends AnyFunSuite {
   }
 
   test("q53 ntile window is key-partitioned — no single-partition global sort") {
-    val df = SparkEntry.queries("q53_ntile_per_lang")(spark, sf)
+    val df = PlanAtScale.planned(spark)(SparkEntry.queries("q53_ntile_per_lang")(spark, sf))
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange SinglePartition"), s"global window detected:\n$plan")
     assert(hashShuffles(df) == 1, s"ntile + groupBy should share the lang clustering:\n$plan")
@@ -74,7 +75,7 @@ class FeatureQueriesSpec extends AnyFunSuite {
     // shuffle carries ≤ |users|·|types| rows, and the declared value list
     // means NO eager distinct-discovery job before planning (the killer at
     // 100 TB — .pivot(col) without values runs a collect first)
-    val df = SparkEntry.queries("q55_pivot")(spark, sf)
+    val df = PlanAtScale.planned(spark)(SparkEntry.queries("q55_pivot")(spark, sf))
     val n = hashShuffles(df)
     assert(n == 2, s"expected the 2 pivot agg exchanges, got $n:\n${df.queryExecution.executedPlan}")
   }
@@ -220,7 +221,7 @@ class FeatureQueriesSpec extends AnyFunSuite {
     val df = SparkEntry.queries("q72_bucketed_join")(spark, sf)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val fresh = SparkEntry.queries("q72_bucketed_join")(spark, sf)
+      val fresh = PlanAtScale.planned(spark)(SparkEntry.queries("q72_bucketed_join")(spark, sf))
       val n = hashShuffles(fresh)
       assert(n == 1, s"join must use bucket co-location, got $n hash shuffles:\n${fresh.queryExecution.executedPlan}")
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
@@ -296,8 +297,8 @@ class FeatureQueriesSpec extends AnyFunSuite {
     }
     // the window assignment is closed-form in the scan (an Expand), never
     // a join against a generated window spine
-    val plan = SparkEntry.queries("q112_sliding_window")(spark, sf)
-      .queryExecution.executedPlan.toString
+    val plan = PlanAtScale(spark)(SparkEntry.queries("q112_sliding_window")(spark, sf)
+      .queryExecution.executedPlan.toString)
     assert(plan.contains("Expand") || plan.contains("explode"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }

@@ -95,7 +95,7 @@ class FlowSpec extends AnyFunSuite {
     // attestation.
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     import graft.streaming.StreamIngest
-    val work = java.nio.file.Files.createTempDirectory("wmpin").toString
+    val work = Engine.tempDir("wmpin")
     val ev = Tables.events(spark, sf)
       .select(unix_micros(col("ts")).as("us"), col("event_id"))
     val Array(t0, t1) = ev.agg(min("us"), max("us")).collect()

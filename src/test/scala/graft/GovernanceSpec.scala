@@ -59,7 +59,7 @@ class GovernanceSpec extends AnyFunSuite {
   }
 
   test("q120 SCD2 plan: one user_id exchange shared by the change filter and both windows") {
-    val plan = run("q120_scd2").queryExecution.executedPlan.toString
+    val plan = PlanAtScale(spark)(run("q120_scd2").queryExecution.executedPlan.toString)
     val shuffles = "Exchange hashpartitioning".r.findAllIn(plan).length
     assert(shuffles == 1, s"expected a single reused user_id shuffle, got $shuffles:\n$plan")
   }

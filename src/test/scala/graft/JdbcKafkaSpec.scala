@@ -18,8 +18,7 @@ class JdbcKafkaSpec extends AnyFunSuite {
   lazy val spark = Engine.session("jdbc-kafka")
   import spark.implicits._
 
-  System.setProperty("derby.system.home",
-    java.nio.file.Files.createTempDirectory("derby_home").toString)
+  System.setProperty("derby.system.home", Engine.tempDir("derby_home"))
 
   private def derbyProps = {
     val p = new java.util.Properties()
@@ -27,7 +26,7 @@ class JdbcKafkaSpec extends AnyFunSuite {
     p
   }
   private def freshUrl(name: String) =
-    s"jdbc:derby:${java.nio.file.Files.createTempDirectory(name)}/db;create=true"
+    s"jdbc:derby:${Engine.tempDir(name)}/db;create=true"
 
   test("JDBC roundtrip against embedded Derby: overwrite, append, read back") {
     val url = freshUrl("derby_rt")
@@ -64,7 +63,7 @@ class JdbcKafkaSpec extends AnyFunSuite {
 
   test("kafkaWriter builds the producer-sink config; start() pins the jar boundary") {
     val stream = spark.readStream.format("rate").option("rowsPerSecond", "1").load()
-    val ckpt = java.nio.file.Files.createTempDirectory("kafka_ck").toString
+    val ckpt = Engine.tempDir("kafka_ck")
     val w = StreamIngest.kafkaWriter(stream, "broker1:9092", "forecast_topic", ckpt)
     val e = intercept[Exception](w.start())
     assert(e.getMessage.toLowerCase.contains("kafka"), e.getMessage)

@@ -17,8 +17,7 @@ class PipelineSpec extends AnyFunSuite {
   lazy val spark = Engine.session("pipeline-test")
   import spark.implicits._
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String): String = Engine.tempDir(prefix)
 
   test("streaming ingest is replay-safe: same checkpoint drains the source exactly once") {
     val work = tmp("graft_replay")
@@ -240,7 +239,7 @@ class PipelineSpec extends AnyFunSuite {
     val joined = spark.table("bkt_a").join(spark.table("bkt_b"), "k")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val plan = joined.queryExecution.executedPlan.toString
+      val plan = PlanAtScale(spark)(joined.queryExecution.executedPlan.toString)
       assert(!plan.contains("Exchange"), s"bucketed join should be shuffle-free:\n$plan")
       assert(joined.count() == 2)
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")

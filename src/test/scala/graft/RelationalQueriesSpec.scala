@@ -82,16 +82,16 @@ class RelationalQueriesSpec extends AnyFunSuite {
     // on the bin key — never a nested-loop/cartesian theta join
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val plan = rangeJoin(pts, col("p"), ivs, col("lo"), col("hi"), 8)
-        .queryExecution.executedPlan.toString
+      val plan = PlanAtScale(spark)(rangeJoin(pts, col("p"), ivs, col("lo"), col("hi"), 8)
+        .queryExecution.executedPlan.toString)
       assert(!plan.contains("NestedLoop") && !plan.contains("Cartesian"), plan)
       assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"), plan)
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("q03 broadcasts the nation dim") {
-    val plan = SparkEntry.queries("q03_join_revenue")(spark, sf)
-      .queryExecution.executedPlan.toString
+    val plan = PlanAtScale(spark)(SparkEntry.queries("q03_join_revenue")(spark, sf)
+      .queryExecution.executedPlan.toString)
     assert(plan.contains("BroadcastHashJoin"), plan)
   }
 }

@@ -25,7 +25,7 @@ class ReleaseSpec extends AnyFunSuite {
 
   private lazy val dir: String = {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft_release").toString
+    val work = Engine.tempDir("graft_release")
     val evalText = text("ev", 60, stop = false)
     val dupText = text("dd", 40, stop = true)
     val rows =

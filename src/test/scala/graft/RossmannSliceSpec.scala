@@ -24,7 +24,7 @@ class RossmannSliceSpec extends AnyFunSuite {
   lazy val spark = Engine.session("rossmann-slice")
   import spark.implicits._
 
-  private def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+  private def tmp(p: String) = Engine.tempDir(p)
 
   test("end-to-end: seed -> partitioned table -> per-key forecast -> latestForecasts") {
     val d0 = java.time.LocalDate.parse("2024-01-01")

@@ -75,8 +75,11 @@ class TextVectorSpec extends AnyFunSuite {
 
   test("q117 int8 quantize: exact per-vector recomputation; only the presentation sort shuffles") {
     import org.apache.spark.sql.functions.col
-    val df = VectorQueries.queries("q117_int8_quantize")(spark, "/root/testdata/sf0.001")
-    val got = df.collect()
+    val (df, collected) = PlanAtScale(spark) {
+      val d = VectorQueries.queries("q117_int8_quantize")(spark, "/root/testdata/sf0.001")
+      (d, d.collect())
+    }
+    val got = collected
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     val vecs = Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select(col("vec_id"), col("embedding").cast("array<double>"))
@@ -102,9 +105,9 @@ class TextVectorSpec extends AnyFunSuite {
   test("near-dup pair queries contain no all-pairs join (the 100-TB guarantee)") {
     for (q <- Seq("q23_minhash_dup_pairs", "q24_ngram_jaccard", "q27_embedding_neardup",
                   "q42_simhash_dup_pairs")) {
-      val plan = TextQueries.queries.getOrElse(q,
+      val plan = PlanAtScale(spark)(TextQueries.queries.getOrElse(q,
         VectorQueries.queries(q))(spark, "/root/testdata/sf0.001")
-        .queryExecution.executedPlan.toString
+        .queryExecution.executedPlan.toString)
       assert(!plan.contains("CartesianProduct"), s"$q has a cartesian product")
       assert(!plan.contains("BroadcastNestedLoopJoin"), s"$q has a nested-loop join")
     }
@@ -119,7 +122,8 @@ class TextVectorSpec extends AnyFunSuite {
     assert(!p104.contains("Window"), s"q104 regressed to a window plan:\n$p104")
     // q105's fill window partitions by user_id — SinglePartition in the
     // window exchange would mean the partition keys were lost
-    val df105 = SparkEntry.queries("q105_gap_ffill")(spark, "/root/testdata/sf0.001")
+    val df105 = PlanAtScale.planned(spark)(
+      SparkEntry.queries("q105_gap_ffill")(spark, "/root/testdata/sf0.001"))
     val p105 = df105.queryExecution.executedPlan.toString
     assert(p105.contains("Window"), s"q105 lost its fill window:\n$p105")
     assert(!p105.replaceAll("(?s)Sort \\[user_id.*", "")
