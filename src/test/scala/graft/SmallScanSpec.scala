@@ -113,6 +113,37 @@ class SmallScanSpec extends AnyFunSuite {
     assert(got == want)
   }
 
+  test("micro-batches plan small batch scans as before: stream-static join side, foreachBatch body") {
+    val work = Engine.tempDir("graft_smallscan")
+    Tables.events(spark, sf).select(col("user_id"), col("event_id"))
+      .write.parquet(s"$work/src")
+    val schema = StructType(Seq(
+      StructField("user_id", LongType), StructField("event_id", LongType)))
+    val bodyPlans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    var q: StreamingQuery = null
+    StreamIngest.drain(spark) {
+      q = spark.readStream.schema(schema).parquet(s"$work/src")
+        .join(Tables.customer(spark, sf)
+          .select(col("c_custkey").cast("long").as("user_id"), col("c_nationkey")), "user_id")
+        .writeStream
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .option("checkpointLocation", s"$work/ckpt")
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          val perCustomer = Tables.orders(b.sparkSession, sf).groupBy("o_custkey").count()
+          bodyPlans.add(plan(perCustomer))
+          b.write.mode("overwrite").parquet(s"$work/out")
+        }
+        .start()
+      q
+    }
+    val batchPlan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan.toString
+    assert(batchPlan.contains("customer.parquet"), batchPlan)
+    assert(!batchPlan.contains("Coalesce"), batchPlan)
+    assert(!bodyPlans.isEmpty)
+    bodyPlans.forEach(p => assert(!p.contains("Coalesce"), p))
+  }
+
   test("exactly-once drain over a small source: replay appends nothing") {
     val work = Engine.tempDir("graft_smallscan")
     val src = Tables.orders(spark, sf).select(col("o_orderkey").cast("long").as("ok"),
