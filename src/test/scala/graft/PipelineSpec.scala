@@ -17,10 +17,8 @@ class PipelineSpec extends AnyFunSuite {
   lazy val spark = Engine.session("pipeline-test")
   import spark.implicits._
 
-  private def tmp(prefix: String): String = Engine.tempDir(prefix)
-
   test("streaming ingest is replay-safe: same checkpoint drains the source exactly once") {
-    val work = tmp("graft_replay")
+    val work = Engine.tempDir("graft_replay")
     val (src, tbl, ckpt) = (s"$work/src", s"$work/table", s"$work/ckpt")
     val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
     StreamIngest.toJsonLines(df).write.mode("overwrite").text(src)
@@ -40,7 +38,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("stream-stream interval join: watermarked both sides, lookback pairs only, replay no-op") {
-    val work = tmp("graft_ssjoin")
+    val work = Engine.tempDir("graft_ssjoin")
     val (src, tbl, ckpt) = (s"$work/src", s"$work/table", s"$work/ckpt")
     // one user-7 click at 10:10; views at 10:06 (in window), 10:04
     // (outside 5-min lookback), 10:11 (after click), and a user-8 view
@@ -80,7 +78,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("watermark-bounded streaming dedup: retried deliveries dropped, distinct keys kept") {
-    val work = tmp("graft_wdedup")
+    val work = Engine.tempDir("graft_wdedup")
     val (src, tbl, ckpt) = (s"$work/src", s"$work/table", s"$work/ckpt")
     val rows = Seq(
       (1L, "2024-01-01 10:00:00", "a"),
@@ -104,7 +102,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("exactly-once sink: a retried batch overwrites its own output, never duplicates") {
-    val work = tmp("graft_exactly")
+    val work = Engine.tempDir("graft_exactly")
     val (src, tbl, ckpt) = (s"$work/src", s"$work/table", s"$work/ckpt")
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     StreamIngest.toJsonLines(df).write.mode("overwrite").text(src)
@@ -168,7 +166,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("store layer: ensure is idempotent, append accumulates, overwrite resets") {
-    val dir = tmp("graft_store") + "/t"
+    val dir = Engine.tempDir("graft_store") + "/t"
     val df = Seq((1, "a"), (2, "b")).toDF("k", "v")
     Store.ensureTable(spark, dir, df.schema)
     Store.ensureTable(spark, dir, df.schema) // second ensure: no-op
@@ -182,7 +180,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("partitioned append prunes partitions on key filters") {
-    val dir = tmp("graft_store_part") + "/sales"
+    val dir = Engine.tempDir("graft_store_part") + "/sales"
     val df = Seq(("2024-01-01", 1, 10), ("2024-01-02", 1, 20), ("2024-01-02", 2, 30))
       .toDF("date", "store", "sales")
     Store.appendPartitioned(df, dir, "date")

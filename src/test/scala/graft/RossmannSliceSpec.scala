@@ -24,8 +24,6 @@ class RossmannSliceSpec extends AnyFunSuite {
   lazy val spark = Engine.session("rossmann-slice")
   import spark.implicits._
 
-  private def tmp(p: String) = Engine.tempDir(p)
-
   test("end-to-end: seed -> partitioned table -> per-key forecast -> latestForecasts") {
     val d0 = java.time.LocalDate.parse("2024-01-01")
     // deterministic synthetic seed: 3 stores x 36 days, sales = linear + weekly bump
@@ -36,7 +34,7 @@ class RossmannSliceSpec extends AnyFunSuite {
       sales = 100 * store + 2 * day + (if (day % 7 < 2) 10 else 0),
       customers = 50, open = 1, promo = day % 2, stateholiday = "0",
       schoolholiday = "0", productname = "product_A")
-    val salesDir = tmp("rossmann") + "/rossman_sales"
+    val salesDir = Engine.tempDir("rossmann") + "/rossman_sales"
     // K5 + K3-at-scale: ensure, then date-partitioned append
     Store.ensureTable(spark, salesDir, sales.toDS().toDF().schema)
     Store.appendPartitioned(sales.toDS().toDF().withColumn("date", col("date").cast("string")), salesDir, "date")
@@ -81,7 +79,7 @@ class RossmannSliceSpec extends AnyFunSuite {
           split(col("key"), "\\|").getItem(0), split(col("key"), "\\|").getItem(1)).as("model_name"),
         lit(version).as("model_version"),
         current_timestamp().as("created_on"))
-    val fcDir = tmp("rossmann_fc") + "/forecast_results"
+    val fcDir = Engine.tempDir("rossmann_fc") + "/forecast_results"
     Store.append(toResults(1), fcDir)
     Store.append(toResults(2), fcDir)
 
@@ -143,7 +141,7 @@ class RossmannSliceSpec extends AnyFunSuite {
       concat_ws("-", lit("m"), col("key")).as("model_name"),
       lit(version).as("version"), stage.as("stage"),
       col("n_test"), col("ssq3"), col("train_end"))
-    val tbl = tmp("registry") + "/models"
+    val tbl = Engine.tempDir("registry") + "/models"
     Store.ensureTable(spark, tbl, meta(1, lit(ModelRegistry.Archived)).schema)
     ModelRegistry.register(meta(1, lit(ModelRegistry.Archived)), tbl)
     // the linear+bump seed fits almost exactly -> every key passes a loose
@@ -184,7 +182,7 @@ class RossmannSliceSpec extends AnyFunSuite {
     val coef = series.groupByKey(_.key)
       .flatMapGroups((k: String, it: Iterator[Obs]) => Forecaster.fitCoef(k, it))
       .toDF()
-    val tbl = tmp("registry_coef") + "/models"
+    val tbl = Engine.tempDir("registry_coef") + "/models"
     val meta = coef.select(
       concat_ws("-", lit("m"), col("key")).as("model_name"),
       lit(1).as("version"), lit(ModelRegistry.Production).as("stage"),
@@ -226,7 +224,7 @@ class RossmannSliceSpec extends AnyFunSuite {
   }
 
   test("stateful dedup drops replayed ids across micro-batches") {
-    val work = tmp("graft_dedup")
+    val work = Engine.tempDir("graft_dedup")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.StringType)))
@@ -252,7 +250,7 @@ class RossmannSliceSpec extends AnyFunSuite {
   }
 
   test("streaming daily aggregate with watermark matches the batch answer") {
-    val work = tmp("graft_wm")
+    val work = Engine.tempDir("graft_wm")
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
       .select(col("event_id"),
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
