@@ -59,11 +59,11 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("q156 star join: all dims broadcast, both filters pushed to scans") {
-    val df = PlanAtScale.planned(spark)(run("q156_star_join"))
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = PlanAtScale(spark)(run("q156_star_join").queryExecution.executedPlan.toString)
     assert("BroadcastHashJoin".r.findAllIn(plan).size >= 4,
       "part, customer, nation, region must all broadcast")
     assert(!plan.contains("CartesianProduct"))
+    val df = run("q156_star_join")
     val formatted = {
       val out = new java.io.ByteArrayOutputStream()
       Console.withOut(out) { df.explain("formatted") }

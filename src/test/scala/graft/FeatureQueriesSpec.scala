@@ -24,9 +24,11 @@ class FeatureQueriesSpec extends AnyFunSuite {
     // lag window, running-sum window, per-(user, session) agg and per-user
     // agg all cluster on user_id — a second hash exchange would mean the
     // gaps-and-islands rewrite lost its co-partitioning at 100 TB
-    val df = PlanAtScale.planned(spark)(SparkEntry.queries("q50_sessionize")(spark, sf))
-    val n = hashShuffles(df)
-    assert(n == 1, s"expected 1 hash shuffle, got $n:\n${df.queryExecution.executedPlan}")
+    PlanAtScale(spark) {
+      val df = SparkEntry.queries("q50_sessionize")(spark, sf)
+      val n = hashShuffles(df)
+      assert(n == 1, s"expected 1 hash shuffle, got $n:\n${df.queryExecution.executedPlan}")
+    }
   }
 
   test("sessionize splits on gap > gapSec and never across keys") {
@@ -43,9 +45,9 @@ class FeatureQueriesSpec extends AnyFunSuite {
 
   test("q51 hashSplit is a pure key function: stable across runs, ~75/12.5/12.5, narrow") {
     import spark.implicits._
-    val d = PlanAtScale.planned(spark)(
-      hashSplit(Tables.documents(spark, sf), org.apache.spark.sql.functions.col("doc_id")))
-    assert(hashShuffles(d) == 0, "split assignment must not shuffle")
+    def split() = hashSplit(Tables.documents(spark, sf), org.apache.spark.sql.functions.col("doc_id"))
+    PlanAtScale(spark)(assert(hashShuffles(split()) == 0, "split assignment must not shuffle"))
+    val d = split()
     val counts = d.groupBy("split").count().as[(String, Long)].collect().toMap
     assert(counts.keySet == Set("train", "val", "test"), counts.toString)
     assert(counts("train") > counts("val") && counts("train") > counts("test"), counts.toString)
@@ -63,10 +65,12 @@ class FeatureQueriesSpec extends AnyFunSuite {
   }
 
   test("q53 ntile window is key-partitioned — no single-partition global sort") {
-    val df = PlanAtScale.planned(spark)(SparkEntry.queries("q53_ntile_per_lang")(spark, sf))
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange SinglePartition"), s"global window detected:\n$plan")
-    assert(hashShuffles(df) == 1, s"ntile + groupBy should share the lang clustering:\n$plan")
+    PlanAtScale(spark) {
+      val df = SparkEntry.queries("q53_ntile_per_lang")(spark, sf)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange SinglePartition"), s"global window detected:\n$plan")
+      assert(hashShuffles(df) == 1, s"ntile + groupBy should share the lang clustering:\n$plan")
+    }
   }
 
   test("q55 pivot with a declared value list plans exactly its two agg phases") {
@@ -75,9 +79,11 @@ class FeatureQueriesSpec extends AnyFunSuite {
     // shuffle carries ≤ |users|·|types| rows, and the declared value list
     // means NO eager distinct-discovery job before planning (the killer at
     // 100 TB — .pivot(col) without values runs a collect first)
-    val df = PlanAtScale.planned(spark)(SparkEntry.queries("q55_pivot")(spark, sf))
-    val n = hashShuffles(df)
-    assert(n == 2, s"expected the 2 pivot agg exchanges, got $n:\n${df.queryExecution.executedPlan}")
+    PlanAtScale(spark) {
+      val df = SparkEntry.queries("q55_pivot")(spark, sf)
+      val n = hashShuffles(df)
+      assert(n == 2, s"expected the 2 pivot agg exchanges, got $n:\n${df.queryExecution.executedPlan}")
+    }
   }
 
   test("q57 session_window: sessions per user are disjoint, ordered, and gap-separated") {
@@ -220,8 +226,8 @@ class FeatureQueriesSpec extends AnyFunSuite {
   test("q72 co-bucketed join is shuffle-free: only the final aggregate exchanges") {
     val df = SparkEntry.queries("q72_bucketed_join")(spark, sf)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val fresh = PlanAtScale.planned(spark)(SparkEntry.queries("q72_bucketed_join")(spark, sf))
+    try PlanAtScale(spark) {
+      val fresh = SparkEntry.queries("q72_bucketed_join")(spark, sf)
       val n = hashShuffles(fresh)
       assert(n == 1, s"join must use bucket co-location, got $n hash shuffles:\n${fresh.queryExecution.executedPlan}")
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")

@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.internal.SQLConf
 
 /** Plan-shape assertions (exchange counts, join types, partition counts)
   * run on sf0.001 tables as stand-ins for the plan at scale. Every such
   * table is small enough for `graft.plans.SmallScanStrategy` to plan it
-  * as one partition, which would leave no exchange to count. These
-  * helpers evaluate a plan with
+  * as one partition, which would leave no exchange to count. This
+  * helper evaluates a plan with
   * `spark.sql.adaptive.coalescePartitions.enabled=false`, the switch the
   * strategy's gate reads, so tests see the plan a large table gets. */
 object PlanAtScale {
@@ -24,13 +24,5 @@ object PlanAtScale {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
-  }
-
-  /** Builds `df` and fixes its executed plan under [[apply]]: later reads
-    * of `df.queryExecution.executedPlan` show the plan at scale. */
-  def planned(spark: SparkSession)(df: => DataFrame): DataFrame = apply(spark) {
-    val d = df
-    d.queryExecution.executedPlan
-    d
   }
 }

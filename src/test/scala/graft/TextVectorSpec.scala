@@ -75,11 +75,8 @@ class TextVectorSpec extends AnyFunSuite {
 
   test("q117 int8 quantize: exact per-vector recomputation; only the presentation sort shuffles") {
     import org.apache.spark.sql.functions.col
-    val (df, collected) = PlanAtScale(spark) {
-      val d = VectorQueries.queries("q117_int8_quantize")(spark, "/root/testdata/sf0.001")
-      (d, d.collect())
-    }
-    val got = collected
+    val df = VectorQueries.queries("q117_int8_quantize")(spark, "/root/testdata/sf0.001")
+    val got = df.collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     val vecs = Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select(col("vec_id"), col("embedding").cast("array<double>"))
@@ -98,7 +95,11 @@ class TextVectorSpec extends AnyFunSuite {
     }
     // per-vector HOFs: the only exchange is the final ORDER BY (count in
     // the final plan only — AQE's "Initial Plan" section repeats nodes)
-    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    val plan = PlanAtScale(spark) {
+      val d = VectorQueries.queries("q117_int8_quantize")(spark, "/root/testdata/sf0.001")
+      d.collect()
+      d.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    }
     assert("Exchange".r.findAllIn(plan).size == 1, plan)
   }
 
@@ -122,9 +123,8 @@ class TextVectorSpec extends AnyFunSuite {
     assert(!p104.contains("Window"), s"q104 regressed to a window plan:\n$p104")
     // q105's fill window partitions by user_id — SinglePartition in the
     // window exchange would mean the partition keys were lost
-    val df105 = PlanAtScale.planned(spark)(
-      SparkEntry.queries("q105_gap_ffill")(spark, "/root/testdata/sf0.001"))
-    val p105 = df105.queryExecution.executedPlan.toString
+    val p105 = PlanAtScale(spark)(SparkEntry.queries("q105_gap_ffill")(spark, "/root/testdata/sf0.001")
+      .queryExecution.executedPlan.toString)
     assert(p105.contains("Window"), s"q105 lost its fill window:\n$p105")
     assert(!p105.replaceAll("(?s)Sort \\[user_id.*", "")
       .contains("SinglePartition"), s"q105 window runs on one partition:\n$p105")
