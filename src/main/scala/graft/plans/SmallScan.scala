@@ -20,10 +20,13 @@ import org.apache.spark.sql.internal.SQLConf
   * The gate is Spark's own coalescing settings, no new option: AQE and
   * `spark.sql.adaptive.coalescePartitions.enabled` on, and the relation
   * at most `spark.sql.adaptive.coalescePartitions.minPartitionSize`
-  * bytes. Below that size AQE merges any shuffle of the scan into one
-  * partition anyway, so downstream parallelism is unchanged. Bucketed
-  * relations keep their bucketed partitioning, and an explicit
-  * `repartition(n)` above the scan still plans its own exchange.
+  * bytes. Below that size AQE merges a shuffle of the scan's own rows
+  * into one partition anyway. The gate reads on-disk size, though, and
+  * a plan can shuffle several times that (rows wider in memory than on
+  * disk, explode, n-grams, self-joins): a stage AQE would have split
+  * over a few tasks then runs as one. Bucketed relations keep their
+  * bucketed partitioning, and an explicit `repartition(n)` above the
+  * scan still plans its own exchange.
   * Streaming is untouched: neither a streaming scan nor a batch scan
   * planned on a streaming query's thread (a stream-static join side, a
   * `foreachBatch` body), where AQE does not coalesce stateful plans. */
