@@ -46,7 +46,10 @@ class FeatureQueriesSpec extends AnyFunSuite {
   test("q51 hashSplit is a pure key function: stable across runs, ~75/12.5/12.5, narrow") {
     import spark.implicits._
     def split() = hashSplit(Tables.documents(spark, sf), org.apache.spark.sql.functions.col("doc_id"))
-    PlanAtScale(spark)(assert(hashShuffles(split()) == 0, "split assignment must not shuffle"))
+    PlanAtScale(spark) {
+      val d = split()
+      assert(hashShuffles(d) == 0, "split assignment must not shuffle")
+    }
     val d = split()
     val counts = d.groupBy("split").count().as[(String, Long)].collect().toMap
     assert(counts.keySet == Set("train", "val", "test"), counts.toString)
