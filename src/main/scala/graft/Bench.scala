@@ -37,12 +37,6 @@ import java.nio.file.{Files, Paths}
   */
 object Bench {
 
-  /** Absolute probe calibration + healthy ratio live in [[HostProbe]]
-    * (shared with ScaleProbe — its first run recorded a 28×-inflated
-    * number during a zero-steal degradation window the probe catches). */
-  val ProbeRefSec = HostProbe.ProbeRefSec
-  val ProbeHealthyRatio = HostProbe.HealthyRatio
-
   /** One query's timing; `error` is set when a run threw, and then
     * `min`/`med` carry no time. */
   final case class QStat(min: Double, med: Double, runs: Int, dirty: Int, clean: Int,
@@ -88,15 +82,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to every available core (the target env is local[32]) —
-    // round 5 found the old default of 4 quietly under-parallelizing any
-    // bench run where the driver didn't set SPARK_GRAFT_CPUS
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = Engine.tune(
-      SparkSession.builder().master(s"local[$cpus]"), shufflePartitions = cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-bench")
     // untimed warmup: absorb session/codegen/first-scan startup so the
     // alphabetically-first query isn't charged ~8 s of JVM warmup
     try {
@@ -108,12 +94,10 @@ object Bench {
     // steady-state timing with stall defense. This host shows bursty
     // multi-MINUTE hypervisor CPU-steal windows (/proc/stat steal grows
     // in steps; cgroup throttling is zero, so the noise is external).
-    // Defense, two independent layers:
-    //  - DIRECT evidence: steal jiffies are read around every run; a run
-    //    during which >5% of machine capacity was stolen is discarded as
-    //    dirty (external evidence, not timing heuristics — a genuinely
-    //    slow plan with a quiet host is always kept), and the bench
-    //    waits for a clean 500 ms steal window before rerunning;
+    // Defense:
+    //  - the HostGate: a run with >5% steal or a slow compute probe is
+    //    discarded as dirty, and the bench waits for a clean 500 ms
+    //    window before rerunning;
     //  - RATIO backstop: if the clean runs still show median/min > 3x
     //    (a stall steal sampling missed), collect more runs;
     //  - the reported estimator is the median of the 3 FASTEST accepted
@@ -121,58 +105,8 @@ object Bench {
     //    in the artifact so throttle exposure is visible after the fact.
     val baseRuns = 3
     val maxRuns = 9
-    val nCores = Runtime.getRuntime.availableProcessors()
-    val jiffySec = 0.01 // USER_HZ=100 on this kernel
-    // machine-wide steal jiffies; -1 => the steal layer disables itself
-    def stealJiffies(): Long = HostProbe.stealJiffies()
-    // SECOND, steal-independent signal: round 5 observed a ~6-minute
-    // window where q53–q59 ran 5–40× their steady state with ZERO steal
-    // recorded (the contention outlived its own accounting).
-    // HostProbe.probeOnce measures currently-ATTAINABLE parallel
-    // compute; inflation vs the anchored baseline means the machine
-    // itself is degraded regardless of what /proc/stat says.
-    def probeOnce(): Double = HostProbe.probeOnce()
-    // Rolling window of recent probes (ADVICE r5: an all-time session
-    // minimum lets one turbo burst permanently tighten the threshold).
-    // The per-run baseline is the best of the last `probeWindow` probes
-    // CLAMPED to [0.7, 1.2] × the committed calibration constant:
-    //  - the 0.7 floor means a freak fast probe can tighten the dirty
-    //    threshold by at most 30% below calibration;
-    //  - the 1.2 ceiling means a degraded session can NEVER normalize
-    //    itself — runs keep getting flagged dirty against (near-)
-    //    calibration speed, and the artifact reports the degradation
-    //    (this is exactly the r5 failure mode: the session-best anchor
-    //    drifted up with the host and 49 s runs of a 0.29 s query
-    //    passed as clean).
-    val probeWindow = 12
-    var recentProbes = Vector.empty[Double]
-    var probeBestSession = Double.MaxValue // for the artifact stamp
-    def probeBaseline(): Double = {
-      val recentBest = if (recentProbes.isEmpty) ProbeRefSec else recentProbes.min
-      math.min(math.max(recentBest, ProbeRefSec * 0.7), ProbeRefSec * 1.2)
-    }
-    def hostHealthy(): Boolean = {
-      val p = probeOnce()
-      recentProbes = (recentProbes :+ p).takeRight(probeWindow)
-      if (p < probeBestSession) probeBestSession = p
-      p < probeBaseline() * 1.8
-    }
-    (1 to 3).foreach(_ => hostHealthy()) // JIT-warm the probe, seed the window
-    // block until a 500 ms window passes with <2% of capacity stolen AND
-    // the probe runs at (near-)calibration speed (sleeping costs nothing
-    // and lets the neighbor burst pass), capped
-    def waitForCleanHost(maxWaitMs: Long): Unit = {
-      val deadline = System.nanoTime() + maxWaitMs * 1000000L
-      while (System.nanoTime() < deadline) {
-        val s0 = stealJiffies()
-        Thread.sleep(500)
-        val frac =
-          if (s0 < 0) 0.0
-          else (stealJiffies() - s0) * jiffySec / (0.5 * nCores)
-        if (frac < 0.02 && hostHealthy()) return
-        System.err.println(f"[bench] host degraded (steal ${frac * 100}%.1f%%, probe baseline ${probeBaseline()}%.3f s) — waiting it out")
-      }
-    }
+    val gate = new HostGate()
+    (1 to 3).foreach(_ => gate.healthy()) // JIT-warm the probe, seed the window
     def measure(name: String, fn: (SparkSession, String) => DataFrame): QStat = {
       var clean = Vector.empty[Double]
       var all = Vector.empty[Double]
@@ -181,23 +115,22 @@ object Bench {
       def ratioSuspect(ts: Vector[Double]): Boolean =
         ts.size >= baseRuns && { val s = ts.sorted; s(s.size / 2) / s.head > 3.0 }
       while (attempts < maxRuns && (clean.size < baseRuns || ratioSuspect(clean))) {
-        if (dirtyRuns > 0 || ratioSuspect(clean)) waitForCleanHost(20000)
+        if (dirtyRuns > 0 || ratioSuspect(clean)) gate.waitForClean(20000)
         attempts += 1
-        val s0 = stealJiffies()
+        val s0 = gate.steal()
         val t = timeOnce(name, fn) match {
           case Right(sec) => sec
           case Left(error) =>
             // a query that throws is failed, not a fast run
             return QStat(Double.NaN, Double.NaN, attempts, dirtyRuns, clean.size, Some(error))
         }
-        val s1 = stealJiffies()
         all = all :+ t
-        val stolen = if (s0 < 0 || s1 < 0) 0.0 else (s1 - s0) * jiffySec / (t * nCores)
-        val probeOk = hostHealthy()
-        if (stolen > 0.05 || !probeOk) {
-          dirtyRuns += 1
-          System.err.println(f"[bench] $name run ${all.size}: $t%.2f s DIRTY (steal ${stolen * 100}%.1f%%, probeOk=$probeOk) — discarded")
-        } else clean = clean :+ t
+        gate.dirtyAfter(s0, t) match {
+          case Some(why) =>
+            dirtyRuns += 1
+            System.err.println(f"[bench] $name run ${all.size}: $t%.2f s DIRTY ($why) — discarded")
+          case None => clean = clean :+ t
+        }
       }
       // Estimator: median of the 3 fastest CLEAN runs. With <2 clean
       // runs the number falls back to all runs INCLUDING dirty ones and
@@ -318,7 +251,7 @@ object Bench {
       else {
         System.err.println(s"[bench] $name: ${st.clean} clean runs, " +
           s"hotSpan=$budgetSuspect — end-of-suite retry")
-        waitForCleanHost(30000)
+        gate.waitForClean(30000)
         val re = measure(name, SparkEntry.queries(name))
         val kept = st.betterOf(re)
         // classification position: a budget-suspect query whose retry
@@ -344,9 +277,10 @@ object Bench {
       .mkString("[", ",", "]")
     val (total, totalMin) = totals(results.map(_._2))
     val nDegraded = results.count(_._2.degraded)
-    val probeRatio = probeBestSession / ProbeRefSec
-    val hostDegraded = probeRatio > ProbeHealthyRatio
-    val host = f"""{"probe_ref_sec":$ProbeRefSec,"probe_ref_provenance":"${HostProbe.probeRefProvenance}","probe_best_sec":$probeBestSession%.4f,"probe_best_vs_ref":$probeRatio%.3f,"host_degraded":$hostDegraded,"queries_estimator_degraded":$nDegraded}"""
+    val probeBestSession = gate.bestProbe
+    val probeRatio = probeBestSession / HostProbe.ProbeRefSec
+    val hostDegraded = probeRatio > HostProbe.HealthyRatio
+    val host = f"""{"probe_ref_sec":${HostProbe.ProbeRefSec},"probe_ref_provenance":"${HostProbe.probeRefProvenance}","probe_best_sec":$probeBestSession%.4f,"probe_best_vs_ref":$probeRatio%.3f,"host_degraded":$hostDegraded,"queries_estimator_degraded":$nDegraded}"""
     val streams = streamStats.map { case (n, j) => "\"" + n + "\":" + j }.mkString("{", ",", "}")
     val sentinelJson = sentinel.map { case (sn, _) =>
       val series = sentinelSeries.map { case (pos, t) => f"""[$pos,$t%.3f]""" }.mkString("[", ",", "]")

@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   *    services/training-service/app/db_utils.py:30).
   *  - AQE on: runtime re-planning (skew joins, partition coalescing) is the
   *    100-TB safety net for every shuffle this library emits.
-  *  - shuffle partitions sized for the harness (local[32]); on a real
+  *  - shuffle partitions sized to the local core count; on a real
   *    cluster this is overridden by spark-submit conf, we only set a
   *    default that is sane for local mode (not 200).
   *  - nanosAsLong: the driver's events.parquet carries TIMESTAMP(NANOS)
@@ -22,7 +22,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Engine {
 
-  val DefaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  val DefaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors().toString)
 
   /** Warehouse for bucketed/managed tables (Store.saveBucketed, q72):
     * pinned to a fresh per-JVM temp dir instead of the default
@@ -55,8 +56,8 @@ object Engine {
       } finally paths.close()
     } catch { case NonFatal(_) => () }
 
-  /** Apply engine config to an arbitrary builder (shared by Verify/Bench
-    * mains and tests so every session behaves identically). */
+  /** Apply engine config to an arbitrary builder (shared by [[session]]
+    * and the benchmark so every session behaves identically). */
   def tune(b: SparkSession.Builder, shufflePartitions: String = DefaultCpus): SparkSession.Builder =
     b.withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
@@ -70,9 +71,10 @@ object Engine {
       .config("spark.sql.shuffledHashJoinFactor", "3")
       .config("spark.ui.enabled", "false")
 
-  /** Local session for tests / ad-hoc runs. */
-  def session(appName: String = "graft"): SparkSession = {
-    val s = tune(SparkSession.builder().master(s"local[$DefaultCpus]").appName(appName))
+  /** The local session of every main and test: `local[cpus]`, `cpus`
+    * shuffle partitions, WARN logs. */
+  def session(appName: String = "graft", cpus: String = DefaultCpus): SparkSession = {
+    val s = tune(SparkSession.builder().master(s"local[$cpus]").appName(appName), cpus)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

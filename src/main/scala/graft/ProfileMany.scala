@@ -1,14 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: profile a list of declared queries in one JVM — write each
-  * query's `.explain("formatted")` to <outDir>/<name>_<tag>.txt and print
-  * a per-query line with planning time, execution time (noop sink, best
-  * of `runs`), and a per-stage breakdown (tasks + wall) from the last
-  * run, so scan-stage serialization (1-task stages doing the heavy
-  * per-row work) is visible directly.
+  * query's `.explain("formatted")` to <outDir>/<name>_<tag>.txt, print
+  * every run's seconds ([[Bench.timeOnce]], noop sink), then a per-query
+  * line with planning time, best execution time of `runs`, and a
+  * per-stage breakdown (tasks + wall) from the last run, so scan-stage
+  * serialization (1-task stages doing the heavy per-row work) is visible
+  * directly.
   *
   * Usage: runMain graft.ProfileMany <outDir> <tag> <q1,q2,...|topN=K> [sfDir] [runs]
   */
@@ -45,12 +45,7 @@ object ProfileMany {
     }
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
     val runs = if (args.length > 4) args(4).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = Engine.tune(
-      SparkSession.builder().master(s"local[$cpus]"), shufflePartitions = cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-profile")
     Files.createDirectories(Paths.get(outDir))
     // stage listener: collect (stageId, tasks, wallMs, name) per job window
     val stages = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long, String)]
@@ -81,11 +76,11 @@ object ProfileMany {
             Files.writeString(Paths.get(outDir, s"${name}_$tag.txt"), plan)
             var best = Double.MaxValue
             var lastStages = Seq.empty[(Int, Int, Long, String)]
-            (1 to runs).foreach { _ =>
+            (1 to runs).foreach { i =>
               stages.synchronized(stages.clear())
-              val t0 = System.nanoTime()
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-              val t = (System.nanoTime() - t0) / 1e9
+              val t = Bench.timeOnce(spark, sfDir, name, fn)
+                .fold(e => throw new IllegalStateException(e), identity)
+              println(f"[profile] $name run $i: $t%.3f s")
               if (t < best) best = t
               lastStages = stages.synchronized(stages.toSeq)
             }

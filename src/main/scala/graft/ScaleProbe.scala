@@ -59,57 +59,54 @@ object ScaleProbe {
     "q471_lsh_scurve", "q321_analyze_stats", "q522_erasure_code",
     "q491_ktruss", "q100_last_touch", "q105_gap_ffill", "q561_bradley_terry")
 
+  /** The salted-copy documents + embeddings fixture: `nCopies` copies of
+    * `base`'s tables in `out`, kept when already there. kFrom offsets the
+    * copy salt so the warm-up fixture's vocabulary is disjoint from EVERY
+    * timed fixture's (nothing is accidentally shared). */
+  def gen(spark: SparkSession, base: String, nCopies: Int, kFrom: Int, out: String): Unit =
+    if (!Files.exists(Paths.get(s"$out/documents.parquet"))) {
+      val docs = Tables.documents(spark, base)
+      (kFrom until kFrom + nCopies).map { k =>
+        docs.select(
+          (col("doc_id") + lit((k - kFrom) * 10000000L)).as("doc_id"),
+          array_join(transform(split(col("text"), " "),
+            t => substring(md5(concat(t, lit(s"#$k"))), 1, 6)), " ").as("text"),
+          col("lang"), col("source"))
+      }.reduce(_ unionByName _)
+        .withColumn("n_chars", length(col("text")).cast("long"))
+        .write.mode("overwrite").parquet(s"$out/documents.parquet")
+      // embeddings for q569: copy k cyclically shifts the 64 dims by
+      // (k mod 64) and offsets vec_id. A shift preserves every
+      // within-copy cosine exactly (each copy reproduces the
+      // original's pair structure) while cross-copy cosines stay at
+      // the random ceiling — measured max 0.648 over shifts 1..15 on
+      // the sf0.1 table, far under tau 0.99 — so caught mass grows
+      // ~C×, the honest shape. (id offsets are multiples of 25, so
+      // each copy plants the same clone density.)
+      val emb = Tables.embeddings(spark, base)
+      (kFrom until kFrom + nCopies).map { k =>
+        val sh = (k - kFrom) % 64
+        emb.select(
+          (col("vec_id") + lit((k - kFrom) * 10000000L)).as("vec_id"),
+          (if (sh == 0) col("embedding") else expr(
+            s"concat(slice(embedding, ${sh + 1}, ${64 - sh}), " +
+              s"slice(embedding, 1, $sh))")).as("embedding"),
+          col("label"))
+      }.reduce(_ unionByName _)
+        .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
+    }
+
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val work = if (args.length > 1) args(1) else
-      Files.createTempDirectory("graft_scale").toString
+    // a named directory is kept; the default one is deleted at exit
+    val work = if (args.length > 1) args(1) else Engine.tempDir("graft_scale")
     // copies_hi default 32 (VERDICT r13 "next" #3: does q23's
     // mass-normalized 0.50 plateau past 16?); cross-copy embedding
     // cosine stays ≤ 0.59 for every cyclic shift 1..31 (sampled
     // 400×400 on the sf0.1 table), far under q569's τ = 0.99
     val lo = if (args.length > 2) args(2).toInt else 2
     val hi = if (args.length > 3) args(3).toInt else 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = Engine.tune(
-      SparkSession.builder().master(s"local[$cpus]"), shufflePartitions = cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // kFrom offsets the copy salt so the warm-up fixture's vocabulary is
-    // disjoint from EVERY timed fixture's (nothing is accidentally shared)
-    def gen(nCopies: Int, kFrom: Int, out: String): Unit =
-      if (!Files.exists(Paths.get(s"$out/documents.parquet"))) {
-        val docs = Tables.documents(spark, base)
-        (kFrom until kFrom + nCopies).map { k =>
-          docs.select(
-            (col("doc_id") + lit((k - kFrom) * 10000000L)).as("doc_id"),
-            array_join(transform(split(col("text"), " "),
-              t => substring(md5(concat(t, lit(s"#$k"))), 1, 6)), " ").as("text"),
-            col("lang"), col("source"))
-        }.reduce(_ unionByName _)
-          .withColumn("n_chars", length(col("text")).cast("long"))
-          .write.mode("overwrite").parquet(s"$out/documents.parquet")
-        // embeddings for q569: copy k cyclically shifts the 64 dims by
-        // (k mod 64) and offsets vec_id. A shift preserves every
-        // within-copy cosine exactly (each copy reproduces the
-        // original's pair structure) while cross-copy cosines stay at
-        // the random ceiling — measured max 0.648 over shifts 1..15 on
-        // the sf0.1 table, far under tau 0.99 — so caught mass grows
-        // ~C×, the honest shape. (id offsets are multiples of 25, so
-        // each copy plants the same clone density.)
-        val emb = Tables.embeddings(spark, base)
-        (kFrom until kFrom + nCopies).map { k =>
-          val sh = (k - kFrom) % 64
-          emb.select(
-            (col("vec_id") + lit((k - kFrom) * 10000000L)).as("vec_id"),
-            (if (sh == 0) col("embedding") else expr(
-              s"concat(slice(embedding, ${sh + 1}, ${64 - sh}), " +
-                s"slice(embedding, 1, $sh))")).as("embedding"),
-            col("label"))
-        }.reduce(_ unionByName _)
-          .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-      }
+    val spark = Engine.session("graft-scale")
     // Relational-table fixture for the bench-plan probe: per copy i,
     // every FACT key (order, customer, user, event ids) shifts by
     // i·10⁸ — joins and per-key windows stay within-copy — while the
@@ -119,7 +116,7 @@ object ScaleProbe {
     // doc-graph queries (q471/q491) scale by the certified dedup
     // fixture in the same dir.
     def genRel(nCopies: Int, kFrom: Int, out: String): Unit = {
-      gen(nCopies, kFrom, out)
+      gen(spark, base, nCopies, kFrom, out)
       if (!Files.exists(Paths.get(s"$out/orders.parquet"))) {
         val OFF = 100000000L
         def copies(df: DataFrame, keyCols: Seq[String]): DataFrame =
@@ -141,38 +138,17 @@ object ScaleProbe {
         }
       }
     }
-    // Both noise layers (see HostProbe): steal jiffies around each run
-    // AND the absolute calibration probe after it — the probe is what
-    // caught this probe's own first run recording a 28×-inflated q64
-    // during a zero-steal degradation window.
-    val nCores = Runtime.getRuntime.availableProcessors()
-    var probeBest = Double.MaxValue
+    // Both noise layers of the HostGate around every run — the probe is
+    // what caught this probe's own first run recording a 28×-inflated
+    // q64 during a zero-steal degradation window. A query that throws
+    // stops the probe: an exponent without it is meaningless.
+    val gate = new HostGate()
+    (1 to 3).foreach(_ => gate.healthy()) // JIT-warm the probe, seed the window
     def timeOnce(name: String, dir: String): (Double, Boolean) = {
-      val s0 = HostProbe.stealJiffies()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val t = (System.nanoTime() - t0) / 1e9
-      val s1 = HostProbe.stealJiffies()
-      val stolen = if (s0 < 0 || s1 < 0) 0.0 else (s1 - s0) * 0.01 / (t * nCores)
-      val p = HostProbe.probeOnce()
-      if (p < probeBest) probeBest = p
-      (t, stolen > 0.05 || p > HostProbe.ProbeRefSec * HostProbe.HealthyRatio)
-    }
-    // block until a 500 ms window passes with <2% steal and the compute
-    // probe at (near-)calibration speed — same defense as Bench's
-    def waitForCleanHost(maxWaitMs: Long): Unit = {
-      val deadline = System.nanoTime() + maxWaitMs * 1000000L
-      while (System.nanoTime() < deadline) {
-        val s0 = HostProbe.stealJiffies()
-        Thread.sleep(500)
-        val frac = if (s0 < 0) 0.0
-          else (HostProbe.stealJiffies() - s0) * 0.01 / (0.5 * nCores)
-        val p = HostProbe.probeOnce()
-        if (p < probeBest) probeBest = p
-        if (frac < 0.02 && p < HostProbe.ProbeRefSec * HostProbe.HealthyRatio) return
-        System.err.println(f"[scale] host degraded (steal ${frac * 100}%.1f%%, probe $p%.3f s) — waiting")
-      }
+      val s0 = gate.steal()
+      val t = Bench.timeOnce(spark, dir, name, SparkEntry.queries(name))
+        .fold(e => throw new IllegalStateException(s"$name: $e"), identity)
+      (t, gate.dirtyAfter(s0, t).isDefined)
     }
 
     val ratio = hi.toDouble / lo.toDouble
@@ -241,7 +217,7 @@ object ScaleProbe {
     var best: Map[String, QRes] = Map.empty
     var history: List[(Int, String, QRes)] = Nil
     val dirW = s"$work/warm"
-    gen(1, 900, dirW)
+    gen(spark, base, 1, 900, dirW)
     // untimed warm-up pass: every plan shape compiles and runs once
     // against its own fixture dir — codegen/kernels/shuffle infra hot,
     // timed passes keep their full per-snapshot pipeline cost
@@ -253,9 +229,9 @@ object ScaleProbe {
       val dir1 = s"$work/a$attempt/x$lo"
       val dirC = s"$work/a$attempt/x$hi"
       // per-attempt salt offsets keep every attempt's vocabulary disjoint
-      gen(lo, 1000 * attempt, dir1)
-      gen(hi, 1000 * attempt + 100, dirC)
-      waitForCleanHost(20000)
+      gen(spark, base, lo, 1000 * attempt, dir1)
+      gen(spark, base, hi, 1000 * attempt + 100, dirC)
+      gate.waitForClean(20000)
       val t1 = ProbeQueries.map(q => q -> timeOnce(q, dir1)).toMap
       val tC = ProbeQueries.map(q => q -> timeOnce(q, dirC)).toMap
       // untimed caught-mass census for the lottery-prone queries: the
@@ -308,7 +284,7 @@ object ScaleProbe {
       val dC = s"$work/b$a/x$bHi"
       genRel(bLo, 20000 + 100 * a, d1)
       genRel(bHi, 20000 + 100 * a + 50, dC)
-      waitForCleanHost(20000)
+      gate.waitForClean(20000)
       val t1 = BenchProbeQueries.map(q => q -> timeOnce(q, d1)).toMap
       val tC = BenchProbeQueries.map(q => q -> timeOnce(q, dC)).toMap
       val res = BenchProbeQueries.map { q =>
@@ -354,7 +330,7 @@ object ScaleProbe {
     val settled = massSettled
     val worstNorm = ProbeQueries.map(q => best(q).expMassNorm).max
     val json =
-      f"""{"metric":"scale_exponent","copies_lo":$lo,"copies_hi":$hi,"base":"$base","worst_exponent":$worst%.3f,"mass_settled":$settled,"worst_exponent_mass_norm":$worstNorm%.3f,"attempts":$attempt,"dirty_queries":${best.values.count(_.dirty)},"probe_best_sec":$probeBest%.4f,"probe_ref_sec":${HostProbe.ProbeRefSec},"probe_ref_provenance":"${HostProbe.probeRefProvenance}","mass_attempts":$hist,"queries":$per,"bench":$benchJson}"""
+      f"""{"metric":"scale_exponent","copies_lo":$lo,"copies_hi":$hi,"base":"$base","worst_exponent":$worst%.3f,"mass_settled":$settled,"worst_exponent_mass_norm":$worstNorm%.3f,"attempts":$attempt,"dirty_queries":${best.values.count(_.dirty)},"probe_best_sec":${gate.bestProbe}%.4f,"probe_ref_sec":${HostProbe.ProbeRefSec},"probe_ref_provenance":"${HostProbe.probeRefProvenance}","mass_attempts":$hist,"queries":$per,"bench":$benchJson}"""
     Files.writeString(Paths.get("scale_out.json"), json + "\n")
     println(json)
     spark.stop()

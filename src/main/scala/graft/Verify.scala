@@ -18,27 +18,18 @@ import java.util.Comparator
   *  - recursive deletes use java.nio (no commons-io dependency; ADVICE r1).
   */
 object Verify {
+  import Bench.jsonString
 
   private def deleteRecursive(p: Path): Unit =
     if (Files.exists(p))
       Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
 
-  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    * — a tab or CR in builder-authored SQL would otherwise make the
-    * driver's json.load fail and silently zero the round's correctness. */
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
+  /** [[Bench.jsonString]] escapes ALL control chars (<0x20): a tab or CR
+    * in builder-authored SQL would otherwise make the driver's json.load
+    * fail and silently zero the round's correctness. */
   def writeOracleJson(outDir: String): Unit = {
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
   }
 
@@ -78,11 +69,9 @@ object Verify {
     // only — the driver always runs the full set)
     val subset: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Engine.tune(
-      SparkSession.builder().master(s"local[$cpus]"), shufflePartitions = cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the driver may run Verify without SPARK_GRAFT_CPUS; its dumps have
+    // always been taken on 4 cores then, so that stays the fallback
+    val spark = Engine.session("graft-verify", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
     // timestamp the run boundaries into the dump dir so a downstream
     // compare that ran before the dump finished is provable after the fact
@@ -113,9 +102,9 @@ object Verify {
     // Bench (whose line the driver parses every round), plus a file copy
     // in the dump dir and repo cwd — three paths to the same handshake.
     val qs = sorted.map { case (name, r) =>
-      q(name) + ":" + r.map(n => s"""{"executed":true,"rows":$n}""").getOrElse("""{"executed":false}""")
+      jsonString(name) + ":" + r.map(n => s"""{"executed":true,"rows":$n}""").getOrElse("""{"executed":false}""")
     }.mkString("{", ",", "}")
-    val json = s"""{"verify":"done","executed":$executed,"failed":$fail,"sf":${q(sfDir)},"queries":$qs}"""
+    val json = s"""{"verify":"done","executed":$executed,"failed":$fail,"sf":${jsonString(sfDir)},"queries":$qs}"""
     Files.writeString(Paths.get(s"$outDir/verify_result.json"), json + "\n")
     try Files.writeString(Paths.get("verify_out.json"), json + "\n")
     catch { case _: Throwable => () }
