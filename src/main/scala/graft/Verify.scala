@@ -69,8 +69,8 @@ object Verify {
     // only — the driver always runs the full set)
     val subset: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    // the driver may run Verify without SPARK_GRAFT_CPUS; its dumps have
-    // always been taken on 4 cores then, so that stays the fallback
+    // a correctness run may come without SPARK_GRAFT_CPUS; such dumps
+    // have always been taken on 4 cores, so 4 stays the fallback here
     val spark = Engine.session("graft-verify", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
     // timestamp the run boundaries into the dump dir so a downstream
