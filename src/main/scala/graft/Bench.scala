@@ -191,9 +191,16 @@ object Bench {
       for (a <- timeOnce(sn, sfn); b <- timeOnce(sn, sfn)) sentinelSeries += ((pos, math.min(a, b)))
     }
     // untimed sentinel warm-up: tick 0 must measure the HOST, not the
-    // sentinel query's own codegen warm-up — an inflated first tick
-    // would mark the whole opening span dirty on every run
-    sentinel.foreach { case (sn, sfn) => timeOnce(sn, sfn) }
+    // JVM's warm-up — an inflated first tick would mark the whole
+    // opening span dirty on every run. One warm-up run is not enough:
+    // in a 2-query sf0.001 smoke the sentinel kept getting faster for
+    // 20-25 runs (1.5 s, then 0.30-0.37 s, settling near 0.15 s), so
+    // it warms for 40 runs, stopping at the first failure; then the
+    // warm-up's garbage is collected, as every gcEvery queries below.
+    sentinel.foreach { case (sn, sfn) =>
+      (1 to 40).iterator.map(_ => timeOnce(sn, sfn)).forall(_.isRight)
+    }
+    System.gc()
     sentinelTick(0)
     val firstPass = ordered.zipWithIndex.map { case ((name, fn), idx) =>
       if (idx > 0 && idx % gcEvery == 0) System.gc()

@@ -51,13 +51,12 @@ object ScaleProbe {
     * work is preserved, and output mass grows exactly C× (more
     * customers per nation, more facts per part: the honest shape of a
     * corpus C× the size — no salt lottery, unlike the token-rewrite
-    * dedup fixtures). q521 is census-dominated by construction (fixed
-    * 10,000-start enumeration), so its exponent is expected ~0. */
+    * dedup fixtures). */
   val BenchProbeQueries = Seq(
     "q407_rle_advisor", "q472_permutation_test", "q570_ingest_gate_pipeline",
     "q442_yannakakis", "q392_greedy_cover", "q338_schema_match",
-    "q471_lsh_scurve", "q321_analyze_stats", "q522_erasure_code",
-    "q491_ktruss", "q100_last_touch", "q105_gap_ffill", "q561_bradley_terry")
+    "q471_lsh_scurve", "q321_analyze_stats", "q491_ktruss",
+    "q100_last_touch", "q105_gap_ffill", "q561_bradley_terry")
 
   /** The salted-copy documents + embeddings fixture: `nCopies` copies of
     * `base`'s tables in `out`, kept when already there. kFrom offsets the

@@ -132,26 +132,6 @@ object SparkEntry {
     (AuctionGraphQueries.queries, AuctionGraphQueries.oracleSql),
     (ConvergenceQueries.queries, ConvergenceQueries.oracleSql),
     (RoutingQueries.queries, RoutingQueries.oracleSql),
-    (NumberQueries.queries, NumberQueries.oracleSql),
-    (PrimalityQueries.queries, PrimalityQueries.oracleSql),
-    (CuckooQueries.queries, CuckooQueries.oracleSql),
-    (ElectionQueries.queries, ElectionQueries.oracleSql),
-    (AvailabilityQueries.queries, AvailabilityQueries.oracleSql),
-    (RecoveryQueries.queries, RecoveryQueries.oracleSql),
-    (ContentionQueries.queries, ContentionQueries.oracleSql),
-    (ChecksumQueries.queries, ChecksumQueries.oracleSql),
-    (SortNetQueries.queries, SortNetQueries.oracleSql),
-    (LfsrQueries.queries, LfsrQueries.oracleSql),
-    (FolkloreQueries.queries, FolkloreQueries.oracleSql),
-    (RamseyQueries.queries, RamseyQueries.oracleSql),
-    (NimQueries.queries, NimQueries.oracleSql),
-    (NumberTheoryQueries.queries, NumberTheoryQueries.oracleSql),
-    (EuclidQueries.queries, EuclidQueries.oracleSql),
-    (CombinatoricsQueries.queries, CombinatoricsQueries.oracleSql),
-    (NecklaceQueries.queries, NecklaceQueries.oracleSql),
-    (BaselQueries.queries, BaselQueries.oracleSql),
-    (KaprekarQueries.queries, KaprekarQueries.oracleSql),
-    (ErasureQueries.queries, ErasureQueries.oracleSql),
     (ForecastOpsQueries.queries, ForecastOpsQueries.oracleSql),
     (CurationOpsQueries.queries, CurationOpsQueries.oracleSql),
     (RetrievalOpsQueries.queries, RetrievalOpsQueries.oracleSql),

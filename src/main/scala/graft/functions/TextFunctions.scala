@@ -65,7 +65,7 @@ object TextFunctions {
 
   /** Same, for chunk c of the digest: hex digits 4c+1..4c+4 (= digest
     * bytes 2c, 2c+1 big-endian) — the per-chunk token hash of
-    * [[graft.plans.SimHashKernel.simhash64]]. */
+    * [[graft.plans.SimHashKernel.simhash128]]. */
   def sqlTokenHash16At(tok: String, c: Int): String = {
     def digit(p: Int, mult: Int) =
       s"(strpos('0123456789abcdef', substr(md5($tok),${4 * c + p},1))-1)*$mult"

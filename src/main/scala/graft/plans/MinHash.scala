@@ -4,7 +4,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.SparkSessionExtensions
@@ -221,46 +221,9 @@ object SimHashKernel {
     out
   }
 
-  /** 64-bit SimHash from the first 8 digest bytes of the same per-token
-    * md5: chunk c∈0..3 is bytes (2c, 2c+1) big-endian (= hex digits
-    * 4c+1..4c+4), occupying bits 16c..16c+15 of the result. Chunk 0
-    * therefore equals [[simhash16]]. The 4×16-bit chunk layout is the
-    * banded near-dup index of Manku/Jain/Sarma (WWW'07): hamming ≤ 3
-    * over 64 bits guarantees at least one chunk matches exactly, so a
-    * chunk equi-join finds ALL such pairs without an all-pairs scan. */
-  def simhash64(toks: ArrayData): Long = {
-    val md = localMd.get()
-    val votes = new Array[Int](64)
-    val n = toks.numElements()
-    var i = 0
-    while (i < n) {
-      md.reset(); md.update(toks.getUTF8String(i).getBytes)
-      val d = md.digest()
-      var c = 0
-      while (c < 4) {
-        val v = ((d(2 * c) & 0xff) << 8) | (d(2 * c + 1) & 0xff)
-        var b = 0
-        while (b < 16) {
-          if (((v >> b) & 1) == 1) votes(16 * c + b) += 1 else votes(16 * c + b) -= 1
-          b += 1
-        }
-        c += 1
-      }
-      i += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) {
-      if (votes(b) > 0) out |= (1L << b)
-      b += 1
-    }
-    out
-  }
-
   /** 128-bit SimHash as 8 × 16-bit chunks (array<long>, each 0..65535):
     * chunk c∈0..7 votes on digest bytes (2c, 2c+1) big-endian — the FULL
-    * md5 of each token, extending [[simhash64]]'s layout (chunk 0 equals
-    * [[simhash16]]; chunks 0..3 equal simhash64's chunks). Returned
+    * md5 of each token (chunk 0 equals [[simhash16]]). Returned
     * pre-chunked because the banded index consumes chunks, never the
     * packed value. */
   def simhash128(toks: ArrayData): GenericArrayData = {
@@ -320,30 +283,8 @@ case class SimHash16(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** `simhash64(tokenArray)` → bigint 64-bit SimHash (4 × 16-bit chunks,
-  * chunk 0 == simhash16). */
-case class SimHash64(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"simhash64 needs array<string>, got ${other.catalogString}")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    SimHashKernel.simhash64(input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.SimHashKernel.simhash64($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
 /** `simhash128(tokenArray)` → array<bigint> of the 8 × 16-bit SimHash
-  * chunks (chunks 0..3 == simhash64's; chunk 0 == simhash16). */
+  * chunks (chunk 0 == simhash16). */
 case class SimHash128(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -584,7 +525,8 @@ object CosineKernel {
   }
 }
 
-/** `cosine_r6(a, b)` → double cosine similarity rounded to 6 decimals. */
+/** `VectorFunctions.cosineR6(a, b)` → double cosine similarity rounded
+  * to 6 decimals. */
 case class CosineR6(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
 
@@ -673,7 +615,8 @@ object SrpKernel {
   }
 }
 
-/** `srp_bucket(vec, startPlane, nPlanes, dims)` → bigint SRP-LSH bucket. */
+/** `VectorFunctions.lshBucket(vec, planes, dims)` → bigint SRP-LSH
+  * bucket. */
 case class SrpBucket(child: Expression, start: Int, n: Int, dims: Int)
     extends UnaryExpression {
 
@@ -696,172 +639,12 @@ case class SrpBucket(child: Expression, start: Int, n: Int, dims: Int)
     copy(child = newChild)
 }
 
-/** Deterministic Miller–Rabin single-base pass for ODD m ≥ 3 (q497's
-  * candidate shape): m−1 = dd·2^s2, x = a^dd mod m by square-and-
-  * multiply, pass iff x ∈ {1, m−1} or some squaring x^(2^r), r < s2,
-  * hits m−1. One tight codegen'd loop — the r10 query ran this as two
-  * interpreted HOF folds per row, and the r11 chained-Project rewrite
-  * still paid one row materialization per squaring (80 Projects never
-  * fused; WSCG span count was zero). Products stay ≤ 10¹² for
-  * m ≤ 10⁶+3 — BIGINT-safe, same arithmetic the oracle replays. */
-object MrKernel {
-  def pass(m: Long, a: Long): Long = {
-    var dd = m - 1L
-    var s2 = 0L
-    while (dd % 2L == 0L) { dd /= 2L; s2 += 1L }
-    var x = 1L
-    var base = a % m
-    var e = dd
-    while (e > 0L) {
-      if ((e & 1L) == 1L) x = x * base % m
-      base = base * base % m
-      e >>= 1
-    }
-    if (x == 1L || x == m - 1L) return 1L
-    var r = 1L
-    while (r < s2) {
-      x = x * x % m
-      if (x == m - 1L) return 1L
-      r += 1L
-    }
-    0L
-  }
-}
-
-/** Extended Euclid in one codegen'd loop: returns [g, s, t, steps]
-  * with a·s + b·t = g, iteration-capped at 90 (never binds below
-  * Lamé's bound for inputs < 10⁶ — q515's fold semantics verbatim;
-  * the interpreted 90-step HOF fold was 13.5M boxed struct rebuilds
-  * per bench run). */
-object EgcdKernel {
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
-  def egcd90(a: Long, b: Long): GenericArrayData = {
-    var r = a; var r2 = b
-    var s = 1L; var s2 = 0L
-    var t = 0L; var t2 = 1L
-    var steps = 0L
-    var i = 0
-    while (i < 90) {
-      if (r2 != 0L) {
-        val q = r / r2
-        val nr = r - q * r2; r = r2; r2 = nr
-        val ns = s - q * s2; s = s2; s2 = ns
-        val nt = t - q * t2; t = t2; t2 = nt
-        steps += 1L
-      }
-      i += 1
-    }
-    new GenericArrayData(Array(r, s, t, steps))
-  }
-}
-
-/** `egcd90(a, b)` → array<bigint> [g, bezout_s, bezout_t, steps]. */
-case class Egcd90(left: Expression, right: Expression) extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"egcd90 needs two bigint columns, got ${left.dataType.catalogString}, " +
-        right.dataType.catalogString)
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    EgcdKernel.egcd90(a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.EgcdKernel.egcd90($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Egcd90 = copy(left = newLeft, right = newRight)
-}
-
-/** Fermat test companion to [[MrKernel]]: x = a^(m−1) mod m in one
-  * codegen'd square-and-multiply loop (full exponent, no witness
-  * chase — every base-a pseudoprime passes, which is exactly what
-  * q513 counts). Same ≤ 10¹² product bound. */
-object FermatKernel {
-  def pow(m: Long, a: Long): Long = {
-    var x = 1L
-    var base = a % m
-    var e = m - 1L
-    while (e > 0L) {
-      if ((e & 1L) == 1L) x = x * base % m
-      base = base * base % m
-      e >>= 1
-    }
-    x
-  }
-}
-
-/** `fermat_pow(m, a)` → bigint: a^(m−1) mod m (Fermat test residue). */
-case class FermatPow(child: Expression, a: Int) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == LongType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"fermat_pow needs a bigint column, got ${child.dataType.catalogString}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    FermatKernel.pow(input.asInstanceOf[Long], a.toLong)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.FermatKernel.pow($c, ${a}L)")
-
-  override protected def withNewChildInternal(newChild: Expression): FermatPow =
-    copy(child = newChild)
-}
-
-/** `mr_pass(m, a)` → 0/1 bigint: Miller–Rabin pass of odd m at base a. */
-case class MrPass(child: Expression, a: Int) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == LongType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"mr_pass needs a bigint column, got ${child.dataType.catalogString}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    MrKernel.pass(input.asInstanceOf[Long], a.toLong)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.MrKernel.pass($c, ${a}L)")
-
-  override protected def withNewChildInternal(newChild: Expression): MrPass =
-    copy(child = newChild)
-}
-
 /** Session extensions: registers the engine's native functions and the
   * small-scan planner strategy ([[SmallScanStrategy]]).
   * Installed by Engine via `SparkSession.builder.withExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(SmallScanStrategy)
-    ext.injectFunction((
-      new FunctionIdentifier("egcd90"),
-      new ExpressionInfo(classOf[Egcd90].getName, "egcd90"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b) => Egcd90(a, b)
-        case _ => throw new IllegalArgumentException(
-          "usage: egcd90(aCol, bCol)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("fermat_pow"),
-      new ExpressionInfo(classOf[FermatPow].getName, "fermat_pow"),
-      (children: Seq[Expression]) => children match {
-        case Seq(v, Literal(a: Int, IntegerType)) => FermatPow(v, a)
-        case _ => throw new IllegalArgumentException(
-          "usage: fermat_pow(bigintCol, a) with a literal int base a")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("mr_pass"),
-      new ExpressionInfo(classOf[MrPass].getName, "mr_pass"),
-      (children: Seq[Expression]) => children match {
-        case Seq(v, Literal(a: Int, IntegerType)) => MrPass(v, a)
-        case _ => throw new IllegalArgumentException(
-          "usage: mr_pass(bigintCol, a) with a literal int base a")
-      }))
     ext.injectFunction((
       new FunctionIdentifier("minhash_sigs"),
       new ExpressionInfo(classOf[MinHashSigs].getName, "minhash_sigs"),
@@ -923,25 +706,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[SimHash16].getName, "simhash16"),
       (children: Seq[Expression]) => SimHash16(children.head)))
     ext.injectFunction((
-      new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (children: Seq[Expression]) => SimHash64(children.head)))
-    ext.injectFunction((
       new FunctionIdentifier("simhash128"),
       new ExpressionInfo(classOf[SimHash128].getName, "simhash128"),
       (children: Seq[Expression]) => SimHash128(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("srp_bucket"),
-      new ExpressionInfo(classOf[SrpBucket].getName, "srp_bucket"),
-      (children: Seq[Expression]) => children match {
-        case Seq(v, Literal(s: Int, IntegerType), Literal(n: Int, IntegerType),
-                 Literal(d: Int, IntegerType)) => SrpBucket(v, s, n, d)
-        case _ => throw new IllegalArgumentException(
-          "usage: srp_bucket(vecCol, startPlane, nPlanes, dims) with literal ints")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("cosine_r6"),
-      new ExpressionInfo(classOf[CosineR6].getName, "cosine_r6"),
-      (children: Seq[Expression]) => CosineR6(children(0), children(1))))
   }
 }

@@ -151,17 +151,13 @@ class MinHashKernelSpec extends AnyFunSuite {
       .select(col("doc_id"), tokens(col("text")).as("toks"))
     val all = docs.select(col("doc_id"),
       expr("simhash128(toks)").as("sh128"),
-      expr("simhash64(toks)").as("sh64"),
       expr("simhash16(toks)").as("sh16"))
     // every chunk is a 16-bit value
     assert(all.filter(exists(col("sh128"),
       c => c < 0 || c > 65535)).count() == 0)
     assert(all.filter(size(col("sh128")) =!= 8).count() == 0)
-    // chunk 0 == simhash16; chunks 0..3 reassemble simhash64 (bits 16c..16c+15)
+    // chunk 0 == simhash16
     assert(all.filter(element_at(col("sh128"), 1) =!= col("sh16")).count() == 0)
-    val packed = (0 until 4).map(c =>
-      shiftleft(element_at(col("sh128"), c + 1), 16 * c)).reduce(_ + _)
-    assert(all.filter(packed =!= col("sh64")).count() == 0)
   }
 
   test("srp_bucket kernel == declarative zip_with/aggregate form on real embeddings") {
