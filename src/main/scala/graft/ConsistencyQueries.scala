@@ -43,50 +43,29 @@ object ConsistencyQueries {
         val Array(t0, t1) = ev.agg(min("us"), max("us")).collect()
           .flatMap(r => Array(r.getLong(0), r.getLong(1) + 1))
         val third = (t1 - t0) / 3
-        val src = new java.io.File(s"$work/src"); src.mkdirs()
-        (0 to 2).foreach { b =>
-          val scratch = s"$work/.b$b"
-          streaming.StreamIngest.toJsonLines(
-            ev.filter(expr(s"least((us - $t0) div $third, 2)") === b))
-            .coalesce(1).write.mode("overwrite").text(scratch)
-          val part = new java.io.File(scratch).listFiles()
-            .find(f => f.getName.startsWith("part-")).get
-          val dest = new java.io.File(src, f"b$b%d.txt")
-          java.nio.file.Files.move(part.toPath, dest.toPath)
-          dest.setLastModified(1700000000000L + b * 600000L)
-        }
-        val schema = StructType(Seq(StructField("us", LongType),
-          StructField("event_id", LongType), StructField("event_type", StringType)))
-        val parsed = streaming.StreamIngest.parseEnvelope(
-          s.readStream.format("text").option("maxFilesPerTrigger", "1").load(s"$work/src"),
-          schema)
-        streaming.StreamIngest.drain(s) {
-          parsed.groupBy("event_type")
-            .agg(count(lit(1)).as("n"), max("us").as("last_us"))
-            .writeStream.outputMode("update")
-            .option("checkpointLocation", s"$work/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: DataFrame, id: Long) =>
-              val landedDir = s"$work/landed"
-              val spark2 = b.sparkSession
-              val updated = b.select("event_type", "n", "last_us")
-                .localCheckpoint(true)
-              val merged =
-                if (new java.io.File(landedDir).exists()) {
-                  val cur = spark2.read.parquet(landedDir)
-                  cur.join(updated.select(col("event_type").as("uk")),
-                      col("event_type") === col("uk"), "left_anti")
-                    .select("event_type", "n", "last_us")
-                    .unionByName(updated)
-                } else updated
-                // overwrite must land fully before the next batch reads it
-              val tmp = s"$work/.landed_tmp"
-              merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-              val t = new java.io.File(tmp); val l = new java.io.File(landedDir)
-              org.apache.commons.io.FileUtils.deleteQuietly(l)
-              org.apache.commons.io.FileUtils.moveDirectory(t, l)
-            }
-            .start()
+        val parsed = streaming.StreamIngest.orderedFileStream(work,
+          (0 to 2).map(b => ev.filter(expr(s"least((us - $t0) div $third, 2)") === b)),
+          StructType(Seq(StructField("us", LongType), StructField("event_id", LongType),
+            StructField("event_type", StringType))))
+        val counts = parsed.groupBy("event_type")
+          .agg(count(lit(1)).as("n"), max("us").as("last_us"))
+        streaming.StreamIngest.drain(counts, "update", s"$work/ckpt") { (b, _) =>
+          val landedDir = s"$work/landed"
+          val updated = b.select("event_type", "n", "last_us").localCheckpoint(true)
+          val merged =
+            if (new java.io.File(landedDir).exists()) {
+              b.sparkSession.read.parquet(landedDir)
+                .join(updated.select(col("event_type").as("uk")),
+                  col("event_type") === col("uk"), "left_anti")
+                .select("event_type", "n", "last_us")
+                .unionByName(updated)
+            } else updated
+          // overwrite must land fully before the next batch reads it
+          val tmp = s"$work/.landed_tmp"
+          merged.coalesce(1).write.mode("overwrite").parquet(tmp)
+          val t = new java.io.File(tmp); val l = new java.io.File(landedDir)
+          org.apache.commons.io.FileUtils.deleteQuietly(l)
+          org.apache.commons.io.FileUtils.moveDirectory(t, l)
         }
       }
       s.read.parquet(s"$work/landed")

@@ -137,37 +137,16 @@ object FlowQueries {
           // stragglers arrive two batches late (capped at the last batch)
           .withColumn("batch", least(col("third") +
             when(col("straggler"), 2L).otherwise(0L), lit(2L)))
-        val src = new java.io.File(s"$work/src"); src.mkdirs()
-        (0 to 2).foreach { b =>
-          val scratch = s"$work/.b$b"
-          StreamIngest.toJsonLines(
-            tagged.filter(col("batch") === b).select("us", "event_id"))
-            .coalesce(1).write.mode("overwrite").text(scratch)
-          val part = new java.io.File(scratch).listFiles()
-            .find(f => f.getName.startsWith("part-")).get
-          val dest = new java.io.File(src, f"b$b%d.txt")
-          java.nio.file.Files.move(part.toPath, dest.toPath)
-          dest.setLastModified(1700000000000L + b * 600000L) // strict mtime order
-        }
-        val parsed = StreamIngest.parseEnvelope(
-          s.readStream.format("text")
-            .option("maxFilesPerTrigger", "1") // one file per micro-batch
-            .load(s"$work/src"),
-          StructType(Seq(StructField("us", LongType), StructField("event_id", LongType))))
+        val accepted = StreamIngest.orderedFileStream(work,
+            (0 to 2).map(b => tagged.filter(col("batch") === b).select("us", "event_id")),
+            StructType(Seq(StructField("us", LongType), StructField("event_id", LongType))))
           .withColumn("ts", timestamp_micros(col("us")))
-        StreamIngest.drain(s) {
-          parsed
-            .withWatermark("ts", "7 days")
-            .groupBy(window(col("ts"), "1 day").as("wnd"))
-            .agg(count(lit(1)).as("n_accepted"))
-            .select(unix_micros(col("wnd.start")).as("day_us"), col("n_accepted"))
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", s"$work/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: DataFrame, id: Long) =>
-              b.write.mode("append").parquet(s"$work/out")
-            }
-            .start()
+          .withWatermark("ts", "7 days")
+          .groupBy(window(col("ts"), "1 day").as("wnd"))
+          .agg(count(lit(1)).as("n_accepted"))
+          .select(unix_micros(col("wnd.start")).as("day_us"), col("n_accepted"))
+        StreamIngest.drain(accepted, "append", s"$work/ckpt") {
+          (b, _) => b.write.mode("append").parquet(s"$work/out")
         }
       }
       s.read.parquet(s"$work/out").orderBy("day_us")

@@ -384,10 +384,8 @@ object LifecycleOpsQueries {
     // `drained` delta table via ingestOnceExactly — EXACTLY-once by
     // construction (ADVICE r13): each micro-batch OVERWRITES its own
     // batch_id=N partition, so even a mid-append crash-then-retry
-    // replaces its partial output instead of duplicating it (the plain
-    // ingestOnce form is only at-least-once: its checkpoint dedups
-    // whole source files, not partial appends). The drain is then
-    // REPLAYED against the same checkpoint and must append nothing —
+    // replaces its partial output instead of duplicating it. The drain
+    // is then REPLAYED against the same checkpoint and must append nothing —
     // any duplication shifts every post-drain gate value and fails the
     // oracle hash. Stage 2: the q552 decision re-evaluated on the
     // pre-drain snapshot and on pre ∪ drained (each anchored to its

@@ -57,7 +57,7 @@ object PipelineQueries {
 
     // S2/P1/P2/K2/§2.9 — the reference's daily ingest, end to end: events
     // → JSON-lines drop dir (producer envelope, X10 write half) →
-    // file-stream parse → checkpointed foreachBatch append → REPLAY with
+    // file-stream parse → checkpointed exactly-once sink → REPLAY with
     // the same checkpoint (must ingest nothing) → read the table back and
     // aggregate. Any replay duplication doubles the counts and fails the
     // oracle, so exactly-once is what's verified. The drain+replay stage
@@ -66,17 +66,11 @@ object PipelineQueries {
     "q29_stream_ingest" -> ((s, dir) => {
       val work = cachedFixture(s"stream|$dir") { work =>
         val (src, tbl, ckpt) = (s"$work/src", s"$work/table", s"$work/ckpt")
-        val ev = Tables.events(s, dir).select(
-          col("event_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
-          col("user_id"), col("event_type"), col("value"), col("props"))
-        StreamIngest.toJsonLines(ev).write.mode("overwrite").text(src)
-        def parsed = StreamIngest.jsonLinesStream(s, src, Schemas.eventsEnvelope)
-          .withColumn("ts", to_timestamp(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS"))
-        StreamIngest.ingestOnce(parsed, tbl, ckpt) // drain
-        StreamIngest.ingestOnce(parsed, tbl, ckpt) // replay: checkpoint => no-op
+        StreamIngest.eventLines(Tables.events(s, dir)).write.mode("overwrite").text(src)
+        StreamIngest.ingestOnceExactly(StreamIngest.eventStream(s, src), tbl, ckpt) // drain
+        StreamIngest.ingestOnceExactly(StreamIngest.eventStream(s, src), tbl, ckpt) // replay: no-op
       }
-      s.read.parquet(s"$work/table")
+      StreamIngest.readExactlyOnceTable(s, s"$work/table")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           sum(round(col("value") * 1000000).cast(LongType)).as("sum_v6"),
@@ -290,22 +284,10 @@ object PipelineQueries {
     // answers must be identical for the hash to match.
     "q48_stream_daily_agg" -> ((s, dir) => {
       val work = cachedFixture(s"wmagg|$dir") { work =>
-        val ev = Tables.events(s, dir).select(
-          col("event_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
-          col("user_id"), col("event_type"), col("value"), col("props"))
-        StreamIngest.toJsonLines(ev).write.mode("overwrite").text(s"$work/src")
-        val parsed = StreamIngest.jsonLinesStream(s, s"$work/src", Schemas.eventsEnvelope)
-          .withColumn("ts", to_timestamp(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS"))
-        StreamIngest.drain(s) {
-          StreamIngest.dailyCounts(parsed, "ts")
-            .writeStream.outputMode("complete")
-            .option("checkpointLocation", s"$work/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              b.write.mode("overwrite").parquet(s"$work/agg")
-            }
-            .start()
+        StreamIngest.eventLines(Tables.events(s, dir)).write.mode("overwrite").text(s"$work/src")
+        val parsed = StreamIngest.eventStream(s, s"$work/src")
+        StreamIngest.drain(StreamIngest.dailyCounts(parsed, "ts"), "complete", s"$work/ckpt") {
+          (b, _) => b.write.mode("overwrite").parquet(s"$work/agg")
         }
       }
       s.read.parquet(s"$work/agg").orderBy("day", "event_type")
@@ -324,26 +306,14 @@ object PipelineQueries {
     // the drain.
     "q158_stream_hourly_uniques" -> ((s, dir) => {
       val work = cachedFixture(s"hourlyuniq|$dir") { work =>
-        val ev = Tables.events(s, dir).select(
-          col("event_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
-          col("user_id"), col("event_type"), col("value"), col("props"))
-        StreamIngest.toJsonLines(ev).write.mode("overwrite").text(s"$work/src")
-        val parsed = StreamIngest.jsonLinesStream(s, s"$work/src", Schemas.eventsEnvelope)
-          .withColumn("ts", to_timestamp(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS"))
-        StreamIngest.drain(s) {
-          parsed
-            .withColumn("hour_start", date_trunc("hour", col("ts")))
-            .dropDuplicates("user_id", "hour_start")
-            .groupBy("hour_start").agg(count(lit(1)).as("n_uniques"))
-            .select(unix_micros(col("hour_start")).as("hour_us"), col("n_uniques"))
-            .writeStream.outputMode("complete")
-            .option("checkpointLocation", s"$work/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              b.write.mode("overwrite").parquet(s"$work/agg")
-            }
-            .start()
+        StreamIngest.eventLines(Tables.events(s, dir)).write.mode("overwrite").text(s"$work/src")
+        val uniques = StreamIngest.eventStream(s, s"$work/src")
+          .withColumn("hour_start", date_trunc("hour", col("ts")))
+          .dropDuplicates("user_id", "hour_start")
+          .groupBy("hour_start").agg(count(lit(1)).as("n_uniques"))
+          .select(unix_micros(col("hour_start")).as("hour_us"), col("n_uniques"))
+        StreamIngest.drain(uniques, "complete", s"$work/ckpt") {
+          (b, _) => b.write.mode("overwrite").parquet(s"$work/agg")
         }
       }
       s.read.parquet(s"$work/agg").orderBy("hour_us")
@@ -362,27 +332,15 @@ object PipelineQueries {
     // back. Oracle = the batch gap-sessionization (same as q57's).
     "q136_stream_sessions" -> ((s, dir) => {
       val work = cachedFixture(s"ssess|$dir") { work =>
-        val ev = Tables.events(s, dir).select(
-          col("event_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
-          col("user_id"), col("event_type"), col("value"), col("props"))
-        StreamIngest.toJsonLines(ev).write.mode("overwrite").text(s"$work/src")
-        val parsed = StreamIngest.jsonLinesStream(s, s"$work/src", Schemas.eventsEnvelope)
-          .withColumn("ts", to_timestamp(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS"))
-        StreamIngest.drain(s) {
-          parsed
-            .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
-            .agg(count(lit(1)).as("n"))
-            .select(col("user_id"),
-              unix_micros(col("sw.start")).as("start_us"),
-              unix_micros(col("sw.end")).as("end_us"), col("n"))
-            .writeStream.outputMode("complete")
-            .option("checkpointLocation", s"$work/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              b.write.mode("overwrite").parquet(s"$work/sessions")
-            }
-            .start()
+        StreamIngest.eventLines(Tables.events(s, dir)).write.mode("overwrite").text(s"$work/src")
+        val sessions = StreamIngest.eventStream(s, s"$work/src")
+          .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
+          .agg(count(lit(1)).as("n"))
+          .select(col("user_id"),
+            unix_micros(col("sw.start")).as("start_us"),
+            unix_micros(col("sw.end")).as("end_us"), col("n"))
+        StreamIngest.drain(sessions, "complete", s"$work/ckpt") {
+          (b, _) => b.write.mode("overwrite").parquet(s"$work/sessions")
         }
       }
       s.read.parquet(s"$work/sessions").orderBy("user_id", "start_us")
@@ -401,21 +359,16 @@ object PipelineQueries {
     "q41_stream_stream_join" -> ((s, dir) => {
       val work = cachedFixture(s"ssjoin|$dir") { work =>
         val (src, tbl, ckpt) = (s"$work/src", s"$work/table", s"$work/ckpt")
-        val ev = Tables.events(s, dir)
-          .filter(col("event_type").isin("click", "view"))
-          .select(col("event_id"),
-            date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
-            col("user_id"), col("event_type"), col("value"), col("props"))
-        StreamIngest.toJsonLines(ev).write.mode("overwrite").text(src)
-        def parsed = StreamIngest.jsonLinesStream(s, src, Schemas.eventsEnvelope)
-          .withColumn("ts", to_timestamp(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS"))
+        StreamIngest.eventLines(Tables.events(s, dir).filter(col("event_type").isin("click", "view")))
+          .write.mode("overwrite").text(src)
+        def parsed = StreamIngest.eventStream(s, src)
         def joined = StreamIngest.intervalJoin(
           parsed.filter(col("event_type") === "click"),
           parsed.filter(col("event_type") === "view"))
-        StreamIngest.ingestOnce(joined, tbl, ckpt) // drain
-        StreamIngest.ingestOnce(joined, tbl, ckpt) // replay: checkpoint => no-op
+        StreamIngest.ingestOnceExactly(joined, tbl, ckpt) // drain
+        StreamIngest.ingestOnceExactly(joined, tbl, ckpt) // replay: checkpoint => no-op
       }
-      s.read.parquet(s"$work/table")
+      StreamIngest.readExactlyOnceTable(s, s"$work/table")
         .withColumn("gap_sec",
           unix_timestamp(col("click_ts")) - unix_timestamp(col("view_ts")))
         .groupBy("user_id")
@@ -438,22 +391,18 @@ object PipelineQueries {
     "q101_stream_enrich" -> ((s, dir) => {
       val work = cachedFixture(s"senrich|$dir") { work =>
         val (src, tbl, ckpt) = (s"$work/src", s"$work/table", s"$work/ckpt")
-        val ev = Tables.events(s, dir).select(col("event_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
-          col("user_id"), col("event_type"), col("value"), col("props"))
-        val lines = StreamIngest.toJsonLines(ev)
+        val lines = StreamIngest.eventLines(Tables.events(s, dir))
         lines.write.mode("overwrite").text(src)
         lines.write.mode("append").text(src) // duplicate delivery (retry)
-        val parsed = StreamIngest.jsonLinesStream(s, src, Schemas.eventsEnvelope)
-          .withColumn("ts", to_timestamp(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS"))
+        val parsed = StreamIngest.eventStream(s, src)
         // lateness must cover the fixture's replayed history (30 days of
         // synthetic events land in minutes); live deployments set seconds
         val deduped = StreamIngest.dedupWithinWatermark(parsed, "ts", "90 days", "event_id")
         val dim = Tables.customer(s, dir)
           .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-        StreamIngest.ingestOnce(deduped.join(broadcast(dim), "user_id"), tbl, ckpt)
+        StreamIngest.ingestOnceExactly(deduped.join(broadcast(dim), "user_id"), tbl, ckpt)
       }
-      s.read.parquet(s"$work/table")
+      StreamIngest.readExactlyOnceTable(s, s"$work/table")
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n_events"),
           countDistinct(col("user_id")).as("n_users"),

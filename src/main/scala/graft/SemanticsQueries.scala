@@ -150,24 +150,10 @@ object SemanticsQueries {
         val Array(t0, t1) = ev.agg(min("us"), max("us")).collect()
           .flatMap(r => Array(r.getLong(0), r.getLong(1) + 1))
         val half = (t1 - t0) / 2
-        val src = new java.io.File(s"$work/src"); src.mkdirs()
-        (0 to 1).foreach { b =>
-          val scratch = s"$work/.b$b"
-          streaming.StreamIngest.toJsonLines(
-            ev.filter(expr(s"least((us - $t0) div $half, 1)") === b))
-            .coalesce(1).write.mode("overwrite").text(scratch)
-          val part = new java.io.File(scratch).listFiles()
-            .find(f => f.getName.startsWith("part-")).get
-          val dest = new java.io.File(src, f"b$b%d.txt")
-          java.nio.file.Files.move(part.toPath, dest.toPath)
-          dest.setLastModified(1700000000000L + b * 600000L)
-        }
-        val schema = StructType(Seq(StructField("us", LongType),
-          StructField("event_id", LongType), StructField("user_id", LongType),
-          StructField("etype", StringType)))
-        val parsed = streaming.StreamIngest.parseEnvelope(
-          s.readStream.format("text").option("maxFilesPerTrigger", "1").load(s"$work/src"),
-          schema)
+        val parsed = streaming.StreamIngest.orderedFileStream(work,
+          (0 to 1).map(b => ev.filter(expr(s"least((us - $t0) div $half, 1)") === b)),
+          StructType(Seq(StructField("us", LongType), StructField("event_id", LongType),
+            StructField("user_id", LongType), StructField("etype", StringType))))
         val clicks = parsed.filter(col("etype") === "click")
           .select(col("user_id"), col("event_id").as("c_id"),
             timestamp_micros(col("us")).as("c_ts"))
@@ -176,18 +162,12 @@ object SemanticsQueries {
           .select(col("user_id").as("v_user"), col("event_id").as("v_id"),
             timestamp_micros(col("us")).as("v_ts"))
           .withWatermark("v_ts", "1 minute")
-        streaming.StreamIngest.drain(s) {
-          clicks.join(views,
+        val joined = clicks.join(views,
             expr("user_id = v_user and v_ts between c_ts - interval 10 minutes and c_ts"),
             "leftOuter")
-            .select(col("c_id"), unix_micros(col("c_ts")).as("c_us"), col("v_id"))
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", s"$work/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: DataFrame, id: Long) =>
-              b.write.mode("append").parquet(s"$work/out")
-            }
-            .start()
+          .select(col("c_id"), unix_micros(col("c_ts")).as("c_us"), col("v_id"))
+        streaming.StreamIngest.drain(joined, "append", s"$work/ckpt") {
+          (b, _) => b.write.mode("append").parquet(s"$work/out")
         }
       }
       // the global watermark is the MIN over both streams' (max event

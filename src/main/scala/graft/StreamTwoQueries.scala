@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.StreamIngest
 import graft.PipelineQueries.cachedFixture
@@ -19,7 +18,7 @@ import graft.PipelineQueries.cachedFixture
   * join the version that was TRUE AT EVENT TIME, bound per-trigger
   * intake, keep live distribution telemetry in O(buckets) state, and
   * never drop a malformed record silently. All run as real Structured
-  * Streaming drains (AvailableNow through StreamIngest.drain) against
+  * Streaming drains (StreamIngest.drain) against
   * file-source stand-ins, then certify the LANDED tables against batch
   * oracles — the same contract as q29/q101.
   */
@@ -38,10 +37,7 @@ object StreamTwoQueries {
     "q313_stream_scd2_join" -> ((s, dir) => {
       val work = cachedFixture(s"sscd2|$dir") { work =>
         val (src, tbl, ckpt) = (s"$work/src", s"$work/table", s"$work/ckpt")
-        val ev = Tables.events(s, dir).select(col("event_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
-          col("user_id"), col("event_type"), col("value"), col("props"))
-        StreamIngest.toJsonLines(ev).write.mode("overwrite").text(src)
+        StreamIngest.eventLines(Tables.events(s, dir)).write.mode("overwrite").text(src)
         val mid = Tables.events(s, dir)
           .agg(date_sub(max(to_date(col("ts"))), 15).as("mid")).collect()(0).getDate(0)
         val cust = Tables.customer(s, dir)
@@ -53,15 +49,14 @@ object StreamTwoQueries {
             concat(lit("V2-"), col("c_mktsegment")).as("segment"),
             lit(mid.toString).cast(TimestampType).as("valid_from"),
             lit("2999-01-01").cast(TimestampType).as("valid_to")))
-        val parsed = StreamIngest.jsonLinesStream(s, src, Schemas.eventsEnvelope)
-          .withColumn("ts", to_timestamp(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS"))
+        val parsed = StreamIngest.eventStream(s, src)
         val joined = parsed.join(broadcast(dim),
           parsed("user_id") === dim("user_id") &&
             col("ts") >= col("valid_from") && col("ts") < col("valid_to"))
           .select(parsed("event_id"), col("segment"), col("value"))
-        StreamIngest.ingestOnce(joined, tbl, ckpt)
+        StreamIngest.ingestOnceExactly(joined, tbl, ckpt)
       }
-      s.read.parquet(s"$work/table")
+      StreamIngest.readExactlyOnceTable(s, s"$work/table")
         .groupBy("segment")
         .agg(count(lit(1)).as("n_events"),
           sum(round(col("value") * 1000000).cast(LongType)).as("sum_v6"))
@@ -79,11 +74,7 @@ object StreamTwoQueries {
     "q314_trigger_ledger" -> ((s, dir) => {
       val work = cachedFixture(s"ledger|$dir") { work =>
         val (src, tbl, ckpt) = (s"$work/src", s"$work/ledger", s"$work/ckpt")
-        val ev = Tables.events(s, dir).select(col("event_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
-          col("user_id"), col("event_type"), col("value"), col("props"))
-          .withColumn("part", expr("user_id % 5"))
-        StreamIngest.toJsonLines(ev.repartition(5, col("part")).drop("part"))
+        StreamIngest.eventLines(Tables.events(s, dir).repartition(5, expr("user_id % 5")))
           .withColumn("part", expr(
             "cast(get_json_object(value, '$.user_id') as bigint) % 5"))
           .write.partitionBy("part").mode("overwrite").text(src)
@@ -92,20 +83,11 @@ object StreamTwoQueries {
         val parsed = StreamIngest.parseEnvelope(
           s.readStream.format("text").option("maxFilesPerTrigger", "1")
             .load(s"$src/part=*"), Schemas.eventsEnvelope)
-        StreamIngest.drain(s) {
-          parsed.writeStream
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (batch: DataFrame, id: Long) =>
-              batch.sparkSession.createDataFrame(
-                  java.util.Collections.singletonList(
-                    org.apache.spark.sql.Row(id, batch.count())),
-                  StructType(Seq(StructField("batch_id", LongType),
-                    StructField("rows", LongType))))
-                .write.mode("append").parquet(tbl)
-            }
-            .start()
+        StreamIngest.drain(parsed, "append", ckpt) { (batch, id) =>
+          batch.sparkSession.createDataFrame(
+              java.util.Collections.singletonList(org.apache.spark.sql.Row(id, batch.count())),
+              StructType(Seq(StructField("batch_id", LongType), StructField("rows", LongType))))
+            .write.mode("append").parquet(tbl)
         }
       }
       s.read.parquet(s"$work/ledger")
@@ -125,24 +107,14 @@ object StreamTwoQueries {
     "q315_stream_histogram" -> ((s, dir) => {
       val work = cachedFixture(s"shist|$dir") { work =>
         val (src, tbl, ckpt) = (s"$work/src", s"$work/hist", s"$work/ckpt")
-        val ev = Tables.events(s, dir).filter(col("value") > 0)
-          .select(col("event_id"),
-            date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
-            col("user_id"), col("event_type"), col("value"), col("props"))
-        StreamIngest.toJsonLines(ev).write.mode("overwrite").text(src)
-        val parsed = StreamIngest.jsonLinesStream(s, src, Schemas.eventsEnvelope)
+        StreamIngest.eventLines(Tables.events(s, dir).filter(col("value") > 0))
+          .write.mode("overwrite").text(src)
+        val parsed = StreamIngest.eventStream(s, src)
           .withColumn("v6", expr("cast(round(value * 1000000) as bigint)"))
           .withColumn("bucket", (length(expr("bin(v6)")) - 1).cast(LongType))
         val hist = parsed.groupBy("bucket").agg(count(lit(1)).as("n"))
-        StreamIngest.drain(s) {
-          hist.writeStream
-            .outputMode("complete")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (batch: DataFrame, _: Long) =>
-              batch.write.mode("overwrite").parquet(tbl)
-            }
-            .start()
+        StreamIngest.drain(hist, "complete", ckpt) { (batch, _) =>
+          batch.write.mode("overwrite").parquet(tbl)
         }
       }
       val h = s.read.parquet(s"$work/hist")
@@ -172,10 +144,7 @@ object StreamTwoQueries {
     "q316_dead_letter" -> ((s, dir) => {
       val work = cachedFixture(s"dlq|$dir") { work =>
         val (src, tbl, dlq, ckpt) = (s"$work/src", s"$work/main", s"$work/dlq", s"$work/ckpt")
-        val ev = Tables.events(s, dir).select(col("event_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
-          col("user_id"), col("event_type"), col("value"), col("props"))
-        StreamIngest.toJsonLines(ev)
+        StreamIngest.eventLines(Tables.events(s, dir))
           .withColumn("event_id", expr(
             "cast(get_json_object(value, '$.event_id') as bigint)"))
           .select(when(col("event_id") % 37 === 0,
@@ -188,20 +157,13 @@ object StreamTwoQueries {
         val routed = raw.withColumn("parsed",
           from_json(col("value"), Schemas.eventsEnvelope))
           .withColumn("ok", col("parsed.event_id").isNotNull)
-        StreamIngest.drain(s) {
-          routed.writeStream
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (batch: DataFrame, _: Long) =>
-              batch.persist()
-              batch.filter(col("ok"))
-                .select("parsed.*").write.mode("append").parquet(tbl)
-              batch.filter(!col("ok"))
-                .select(col("value").as("raw_line")).write.mode("append").parquet(dlq)
-              batch.unpersist(); ()
-            }
-            .start()
+        StreamIngest.drain(routed, "append", ckpt) { (batch, _) =>
+          batch.persist()
+          batch.filter(col("ok"))
+            .select("parsed.*").write.mode("append").parquet(tbl)
+          batch.filter(!col("ok"))
+            .select(col("value").as("raw_line")).write.mode("append").parquet(dlq)
+          batch.unpersist(); ()
         }
       }
       val main = s.read.parquet(s"$work/main")

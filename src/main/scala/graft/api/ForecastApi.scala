@@ -24,27 +24,11 @@ object ForecastApi {
     topK(deduped, n, col("forecast_date").desc).orderBy("forecast_date")
   }
 
-  /** The UI retrain button path (web-ui/app/main.py:98-122 →
-    * training-service/app/main.py:36-51 → ray_train_one_job.py): retrain
-    * ONE key on demand and return its fresh forecast rows. The key
-    * filter is an untyped Column predicate so Catalyst pushes it to the
-    * scan — the cluster reads one key's rows, not the corpus; the fit is
-    * the same deterministic seasonal-OLS the weekly job runs, as a
-    * single flatMapGroups task. Callers append the result as a new
-    * model_version and register it (see ml.ModelRegistry.register) —
-    * both append-only, like every write in the engine. */
-  def retrainOne(series: Dataset[Obs], key: String): Dataset[Forecast] = {
-    val s = series.sparkSession
-    import s.implicits._
-    series.filter(col("key") === key)
-      .groupByKey(_.key)
-      .flatMapGroups((k: String, it: Iterator[Obs]) => Forecaster.forecastKey(k, it))
-  }
-
   /** Request-driven forecast (forecast-service/app/main.py:83-112): the
     * next `nDays` days for one key. Inclusive window — nDays+1 rows —
     * matching the reference's pd.date_range inclusivity (helpers.py:29),
-    * which is also where the fixed 7-day path's 8 rows come from.
+    * which is also where the fixed 7-day path's 8 rows come from: the
+    * UI retrain button (web-ui/app/main.py:98-122) is `nDays = 7`.
     *
     * This is the RE-FIT form (reads the series). The production serve
     * path is [[forecastStored]]: the reference answers requests by
@@ -74,17 +58,4 @@ object ForecastApi {
       graft.ml.ModelRegistry.servingVersions(
         registry.filter(col("model_name") === modelName)),
       horizonRows = nDays + 1)
-
-  /** Startup dropdowns (web-ui/app/main.py:38-41): distinct key sets. */
-  def storeProductPairs(sales: DataFrame): DataFrame =
-    sales.select("store", "productname").distinct()
-
-  /** X12 — the reference's row→dict driver-side boundary
-    * (to_dict("records"), task_operators.py:115-133). Driver-side BY
-    * DESIGN: only call on small, already-reduced results (the engine
-    * never collects mid-plan). */
-  def collectAsMaps(df: DataFrame): Seq[Map[String, Any]] = {
-    val cols = df.columns
-    df.collect().toSeq.map(r => cols.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap)
-  }
 }

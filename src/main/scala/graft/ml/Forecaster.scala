@@ -108,41 +108,43 @@ object Forecaster {
     (n - (NumFolds + 1 - f) * ts, n - (NumFolds - f) * ts)
   }
 
+  private def residual3(fit: SeasonalFit, p: Obs): Long =
+    p.y3 - predictSeasonal3(fit, p.x, dow(p.day))
+
+  /** The walk-forward folds of a date-sorted series with at least 2
+    * train rows and a non-empty test, as (fold, train rows, fit on the
+    * train rows, test rows); each fold is fitted when it is reached. */
+  private def folds(pts: Array[Obs]): Iterator[(Int, Int, SeasonalFit, Array[Obs])] =
+    (1 to NumFolds).iterator.flatMap { f =>
+      val (trainEnd, testEnd) = foldBounds(pts.length, f)
+      if (trainEnd < 2 || testEnd <= trainEnd) None
+      else Some((f, trainEnd, fitSeasonal(pts.slice(0, trainEnd)), pts.slice(trainEnd, testEnd)))
+    }
+
   /** U2 (CV half) — per-key walk-forward CV metrics. Call from
     * `groupByKey(_.key).flatMapGroups`. */
-  def cvMetrics(key: String, series: Iterator[Obs]): Iterator[CvMetric] = {
-    val pts = series.toArray.sortBy(_.x)
-    val n = pts.length
-    (1 to NumFolds).iterator.flatMap { f =>
-      val (trainEnd, testEnd) = foldBounds(n, f)
-      if (trainEnd < 2 || testEnd <= trainEnd) Iterator.empty
-      else {
-        val train = pts.slice(0, trainEnd)
-        val test = pts.slice(trainEnd, testEnd)
-        val tn = train.length.toLong
-        val fit = fitSeasonal(train)
-        val abs3 =
-          test.map(p => math.abs(p.y3 - predictSeasonal3(fit, p.x, dow(p.day)))).sorted
-        val m = test.length
-        var sumAbs = 0L; var sumSq = BigInt(0); var sumPct = 0L
-        test.foreach { p =>
-          val a = math.abs(p.y3 - predictSeasonal3(fit, p.x, dow(p.day)))
-          sumAbs += a; sumSq += BigInt(a) * BigInt(a)
-          // pure integer floor-division: exact, matches the SQL oracle's
-          // BIGINT `//` with no float intermediate
-          sumPct += a * 1000000000L / p.y3
-        }
-        val medae =
-          (if (m % 2 == 1) abs3(m / 2).toDouble
-           else (abs3(m / 2 - 1) + abs3(m / 2)) / 2.0) / 1000.0
-        Iterator.single(CvMetric(key, f, tn, m,
-          mae = sumAbs.toDouble / m / 1000.0,
-          rmse = math.sqrt(sumSq.toDouble / m) / 1000.0,
-          mape = sumPct.toDouble / m / 1000000000.0,
-          medae = medae))
+  def cvMetrics(key: String, series: Iterator[Obs]): Iterator[CvMetric] =
+    folds(series.toArray.sortBy(_.x)).map { case (f, nTrain, fit, test) =>
+      val abs3 = test.map(p => math.abs(residual3(fit, p)))
+      val m = test.length
+      var sumAbs = 0L; var sumSq = BigInt(0); var sumPct = 0L
+      test.indices.foreach { i =>
+        val a = abs3(i)
+        sumAbs += a; sumSq += BigInt(a) * BigInt(a)
+        // pure integer floor-division: exact, matches the SQL oracle's
+        // BIGINT `//` with no float intermediate
+        sumPct += a * 1000000000L / test(i).y3
       }
+      val sorted = abs3.sorted
+      val medae =
+        (if (m % 2 == 1) sorted(m / 2).toDouble
+         else (sorted(m / 2 - 1) + sorted(m / 2)) / 2.0) / 1000.0
+      CvMetric(key, f, nTrain.toLong, m,
+        mae = sumAbs.toDouble / m / 1000.0,
+        rmse = math.sqrt(sumSq.toDouble / m) / 1000.0,
+        mape = sumPct.toDouble / m / 1000000000.0,
+        medae = medae)
     }
-  }
 
   /** Forecast horizon: the reference's inclusive 7-day window = 8 rows
     * (pd.date_range inclusivity, helpers.py:29). */
@@ -156,23 +158,28 @@ object Forecaster {
     * request-driven horizons (forecast-service/app/main.py:83-112) pass
     * their own via [[graft.api.ForecastApi.forecastNext]]. */
   def forecastKey(key: String, series: Iterator[Obs],
-                  horizon: Int = HorizonRows): Iterator[Forecast] = {
-    val pts = series.toArray.sortBy(_.x)
-    if (pts.length < 2) return Iterator.empty
-    val n = pts.length.toLong
-    val fit = fitSeasonal(pts)
-    var ssr = BigInt(0)
-    pts.foreach { p =>
-      val r = p.y3 - predictSeasonal3(fit, p.x, dow(p.day))
-      ssr += BigInt(r) * BigInt(r)
+                  horizon: Int = HorizonRows): Iterator[Forecast] =
+    fullFit(series).iterator.flatMap { case (last, fit, ci3) =>
+      (1 to horizon).iterator.map { i =>
+        val x = last.x + i
+        val day = java.sql.Date.valueOf(last.day.toLocalDate.plusDays(i.toLong))
+        val y = predictSeasonal3(fit, x, dow(day))
+        Forecast(key, day, y, y - ci3, y + ci3)
+      }
     }
-    val ci3 = roundAway(1.96 * math.sqrt(ssr.toDouble / n.toDouble))
-    val last = pts.last
-    (1 to horizon).iterator.map { i =>
-      val x = last.x + i
-      val day = java.sql.Date.valueOf(last.day.toLocalDate.plusDays(i.toLong))
-      val y = predictSeasonal3(fit, x, dow(day))
-      Forecast(key, day, y, y - ci3, y + ci3)
+
+  /** The full-series fit [[forecastKey]] and [[fitCoef]] share: the
+    * last observation, the seasonal fit, and the ±1.96σ CI half-width
+    * from the in-sample residuals (exact BigInt sum of squares). None
+    * below 2 observations. */
+  private def fullFit(series: Iterator[Obs]): Option[(Obs, SeasonalFit, Long)] = {
+    val pts = series.toArray.sortBy(_.x)
+    if (pts.length < 2) None
+    else {
+      val fit = fitSeasonal(pts)
+      var ssr = BigInt(0)
+      pts.foreach { p => val r = residual3(fit, p); ssr += BigInt(r) * BigInt(r) }
+      Some((pts.last, fit, roundAway(1.96 * math.sqrt(ssr.toDouble / pts.length.toDouble))))
     }
   }
 
@@ -196,21 +203,10 @@ object Forecaster {
     * computed FROM these stored numbers is bit-identical to one computed
     * by re-fitting (asserted in MlSpec; q107's oracle re-derives the fit
     * from scratch in DuckDB and must hash-match the served rows). */
-  def fitCoef(key: String, series: Iterator[Obs]): Iterator[ModelCoef] = {
-    val pts = series.toArray.sortBy(_.x)
-    if (pts.length < 2) return Iterator.empty
-    val n = pts.length.toLong
-    val fit = fitSeasonal(pts)
-    var ssr = BigInt(0)
-    pts.foreach { p =>
-      val r = p.y3 - predictSeasonal3(fit, p.x, dow(p.day))
-      ssr += BigInt(r) * BigInt(r)
+  def fitCoef(key: String, series: Iterator[Obs]): Iterator[ModelCoef] =
+    fullFit(series).iterator.map { case (last, fit, ci3) =>
+      ModelCoef(key, fit.slope, fit.intercept, fit.sdow.slice(1, 8).toSeq, ci3, last.x, last.day)
     }
-    val ci3 = roundAway(1.96 * math.sqrt(ssr.toDouble / n.toDouble))
-    val last = pts.last
-    Iterator.single(ModelCoef(key, fit.slope, fit.intercept,
-      fit.sdow.slice(1, 8).toSeq, ci3, last.x, last.day))
-  }
 
   /** Pooled (across folds) integer CV sufficient statistics per key — the
     * model-selection metric behind the registry quality gate (reference
@@ -227,17 +223,9 @@ object Forecaster {
                       train_end: java.sql.Date)
   def cvPooled(key: String, series: Iterator[Obs]): Iterator[CvPooled] = {
     val pts = series.toArray.sortBy(_.x)
-    val n = pts.length
     var m = 0L; var ssq = 0L
-    (1 to NumFolds).foreach { f =>
-      val (trainEnd, testEnd) = foldBounds(n, f)
-      if (trainEnd >= 2 && testEnd > trainEnd) {
-        val fit = fitSeasonal(pts.slice(0, trainEnd))
-        pts.slice(trainEnd, testEnd).foreach { p =>
-          val a = p.y3 - predictSeasonal3(fit, p.x, dow(p.day))
-          m += 1; ssq += a * a
-        }
-      }
+    folds(pts).foreach { case (_, _, fit, test) =>
+      test.foreach { p => val a = residual3(fit, p); m += 1; ssq += a * a }
     }
     if (m == 0) Iterator.empty
     else Iterator.single(CvPooled(key, m, ssq, pts.last.day))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Per-drain throughput/state instrumentation (VERDICT r7 "next" #6):
@@ -34,18 +34,25 @@ object StreamMetrics {
   *
   *   readStream (Kafka-shaped: one raw JSON string per record)
   *     → CAST(value AS STRING) → from_json(schema) → select("data.*")
-  *     → foreachBatch parquet append, checkpointed, Trigger.AvailableNow
+  *     → foreachBatch into a `batch_id=N` partition per micro-batch,
+  *       checkpointed, Trigger.AvailableNow
   *
   * The file source stands in for the Kafka topic (same binary-value
   * envelope, kafka_producer.py:45-62); swapping `format("text")` for
-  * `format("kafka")` is the only cluster-side change. Checkpointing gives
-  * the reference's at-least-once drain-the-topic-once-a-day semantics
+  * `format("kafka")` is the only cluster-side change. The checkpoint
+  * gives the reference's drain-the-topic-once-a-day semantics
   * (spark_streaming.py:91-94): a replay with the same checkpoint ingests
-  * nothing new, so the sink stays duplicate-free.
+  * nothing new. The sink is exactly-once where the reference's JDBC
+  * append is at-least-once: a retried micro-batch overwrites its own
+  * partition instead of appending a second copy.
+  *
+  * This object owns every streaming decision the queries share: the one
+  * AvailableNow [[drain]], the event wire format ([[eventLines]] /
+  * [[eventStream]]) and ordered drop files ([[orderedFileStream]]).
   *
   * At 100 TB this is the right shape: the source lists only NEW files per
-  * micro-batch, parse+flatten is embarrassingly parallel, and the sink
-  * append is partitioned by the batch's own partitioning (no shuffle).
+  * micro-batch, parse+flatten is embarrassingly parallel, and each
+  * micro-batch writes with its own partitioning (no shuffle).
   */
 object StreamIngest {
 
@@ -79,15 +86,6 @@ object StreamIngest {
       .option("subscribe", topic)
       .option("startingOffsets", startingOffsets)
 
-  /** S2 Kafka-native, end to end: reader → load → envelope parse — the
-    * exact reference pipeline. Requires the Kafka connector jar at
-    * `load()` time; behind it the parse/flatten/sink path is identical
-    * to the file-source stand-in, so swapping sources changes ONE line
-    * of caller code. */
-  def kafkaStream(spark: SparkSession, brokers: String, topic: String,
-                  schema: StructType, startingOffsets: String = "earliest"): DataFrame =
-    parseEnvelope(kafkaReader(spark, brokers, topic, startingOffsets).load(), schema)
-
   /** K1 Kafka-native — the producer sink half (kafka_producer.py:50-66:
     * one JSON object per record into a topic): rows serialized through
     * [[toJsonLines]]'s envelope as the Kafka `value`, writer configured
@@ -102,21 +100,6 @@ object StreamIngest {
       .option("topic", topic)
       .option("checkpointLocation", checkpointDir)
 
-  /** K2 — checkpointed micro-batch append sink, drained with
-    * AvailableNow (the 4.x successor of the reference's trigger(once)).
-    * Blocks until the drain completes. */
-  def ingestOnce(parsed: DataFrame, tableDir: String, checkpointDir: String): Unit =
-    drain(parsed.sparkSession) {
-      parsed.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(tableDir)
-        }
-        .start()
-    }
-
   /** Guards the check-then-act between `spark.streams.active.isEmpty`
     * and the JVM-global state release (ADVICE r5): query START and the
     * release CHECK are atomic w.r.t. each other, so a drain starting
@@ -127,14 +110,25 @@ object StreamIngest {
     * lock so concurrent drains still overlap. */
   private val stateLock = new Object
 
-  /** Run an AvailableNow drain under the start/release guard: `build`
-    * starts the query INSIDE the lock (atomic with the release check),
-    * the drain is awaited outside it, then state is released if no
-    * other streaming query is live. Every drain in the repo must go
+  /** Drain `stream` to the end of what its source holds now: one
+    * checkpointed AvailableNow query in `outputMode`, each micro-batch
+    * handed to `sink` with its batch id. The query starts INSIDE the
+    * start/release guard, is awaited outside it, is recorded in
+    * [[StreamMetrics]], and state is released if no other streaming
+    * query is live. Returns the finished query (its progress reports
+    * stay readable). Every streaming query src/main starts goes
     * through here — a bare `.start()` elsewhere reopens the race. */
-  def drain(spark: SparkSession)(build: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+  def drain(stream: DataFrame, outputMode: String, checkpointDir: String)(
+      sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val t0 = System.nanoTime()
-    val q = stateLock.synchronized(build)
+    val q = stateLock.synchronized {
+      stream.writeStream
+        .outputMode(outputMode)
+        .option("checkpointLocation", checkpointDir)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch(sink)
+        .start()
+    }
     q.awaitTermination()
     val wall = (System.nanoTime() - t0) / 1e9
     // best-effort metrics: recentProgress is a bounded in-memory ring
@@ -148,7 +142,8 @@ object StreamIngest {
         .map(_.numRowsDroppedByWatermark)).sum
       StreamMetrics.record(StreamMetrics.DrainStat(rows, ps.length, wall, peak, dropped))
     } catch { case _: Throwable => () }
-    releaseStateAfterDrain(spark)
+    releaseStateAfterDrain(stream.sparkSession)
+    q
   }
 
   /** A completed AvailableNow drain is a batch-style use of the
@@ -170,22 +165,16 @@ object StreamIngest {
       } catch { case _: Throwable => () }
     }
 
-  /** K2 upgraded to exactly-once (SURVEY §7.4 risk 3): each micro-batch
-    * lands in its own `batch_id=N` partition directory with OVERWRITE
-    * semantics, so a batch retried after a mid-append crash replaces its
-    * own partial output instead of duplicating it. The reference is
+  /** K2, exactly-once (SURVEY §7.4 risk 3): each micro-batch lands in
+    * its own `batch_id=N` partition directory with OVERWRITE semantics,
+    * so a batch retried after a mid-append crash replaces its own
+    * partial output instead of duplicating it. The reference is
     * at-least-once (plain JDBC append, spark_streaming.py:79-90); this
-    * is the idempotent form a parquet table makes free. */
+    * is the idempotent form a parquet table makes free. Blocks until
+    * the drain completes. */
   def ingestOnceExactly(parsed: DataFrame, tableDir: String, checkpointDir: String): Unit =
-    drain(parsed.sparkSession) {
-      parsed.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$tableDir/batch_id=$batchId")
-        }
-        .start()
+    drain(parsed, "append", checkpointDir) { (batch, batchId) =>
+      batch.write.mode("overwrite").parquet(s"$tableDir/batch_id=$batchId")
     }
 
   /** Read back a table written by [[ingestOnceExactly]] (drops the
@@ -197,6 +186,44 @@ object StreamIngest {
     * (the producer's json.dumps envelope, kafka_producer.py:45-48). */
   def toJsonLines(df: DataFrame): DataFrame =
     df.select(to_json(struct(df.columns.map(col): _*)).as("value"))
+
+  /** The event wire format: `ts` travels as microsecond-precision text,
+    * so a drained table's timestamps equal the `events` table's. */
+  private val EventTsPattern = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+
+  /** Producer half: `events`-shaped rows as JSON lines in the
+    * [[graft.Schemas.eventsEnvelope]] column order. */
+  def eventLines(events: DataFrame): DataFrame =
+    toJsonLines(events.select(col("event_id"),
+      date_format(col("ts"), EventTsPattern).as("ts"),
+      col("user_id"), col("event_type"), col("value"), col("props")))
+
+  /** Consumer half: the streamed [[eventLines]] of `srcDir`, parsed
+    * back to `events` columns with `ts` a timestamp again. */
+  def eventStream(spark: SparkSession, srcDir: String): DataFrame =
+    jsonLinesStream(spark, srcDir, graft.Schemas.eventsEnvelope)
+      .withColumn("ts", to_timestamp(col("ts"), EventTsPattern))
+
+  /** Ordered drop files: each of `batches` lands as ONE JSON-lines file
+    * `$work/src/b<i>.txt` with strictly increasing modification times,
+    * then streams back one file per micro-batch (maxFilesPerTrigger=1,
+    * which admits files in mtime order) parsed against `schema` — so
+    * micro-batch i is exactly `batches(i)`, the fixture shape for
+    * watermark and late-data semantics that depend on batch order. */
+  def orderedFileStream(work: String, batches: Seq[DataFrame], schema: StructType): DataFrame = {
+    val srcDir = s"$work/src"
+    val src = new java.io.File(srcDir); src.mkdirs()
+    batches.zipWithIndex.foreach { case (batch, b) =>
+      val scratch = s"$work/.b$b"
+      toJsonLines(batch).coalesce(1).write.mode("overwrite").text(scratch)
+      val part = new java.io.File(scratch).listFiles().find(_.getName.startsWith("part-")).get
+      val dest = new java.io.File(src, s"b$b.txt")
+      java.nio.file.Files.move(part.toPath, dest.toPath)
+      dest.setLastModified(1700000000000L + b * 600000L)
+    }
+    parseEnvelope(batches.head.sparkSession.readStream.format("text")
+      .option("maxFilesPerTrigger", "1").load(srcDir), schema)
+  }
 
   /** §2.9 extension — cross-batch stateful dedup by message id via
     * flatMapGroupsWithState: a key's first occurrence passes, replays

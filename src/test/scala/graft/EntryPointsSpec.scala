@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The mains' shared plumbing: one session factory, one JSON escaper. */
+/** The mains' shared plumbing (one session factory, one JSON escaper)
+  * and the source lints that keep shared decisions in one file. */
 class EntryPointsSpec extends AnyFunSuite {
 
   /** Every src/main Scala file with its comments blanked out; comments
@@ -33,6 +34,25 @@ class EntryPointsSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"\nSparkSession built outside Engine (use Engine.session):\n  " +
         offenders.mkString("\n  "))
+  }
+
+  test("no src/main file but StreamIngest.scala writes a stream or its wire format") {
+    // Streaming decisions live behind StreamIngest: the AvailableNow
+    // drain (a writer without AvailableNow never returns from
+    // awaitTermination), the event timestamp text pattern, and the mtime
+    // order of drop files.
+    val banned = Seq("writeStream", "AvailableNow", "setLastModified", "yyyy-MM-dd HH:mm:ss.SSSSSS")
+    val offenders = mainSources
+      .filterNot(_._1.endsWith("graft/streaming/StreamIngest.scala"))
+      .flatMap { case (p, src) =>
+        banned.flatMap { b =>
+          val at = src.indexOf(b)
+          if (at < 0) None else Some(s"$p:${src.substring(0, at).count(_ == '\n') + 1}: $b")
+        }
+      }
+    assert(offenders.isEmpty,
+      s"\nstreaming plumbing outside StreamIngest (use drain, eventLines/eventStream, " +
+        s"orderedFileStream):\n  " + offenders.mkString("\n  "))
   }
 
   test("every SQL function GraftExtensions registers is called from src/main") {

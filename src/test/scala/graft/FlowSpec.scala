@@ -107,38 +107,17 @@ class FlowSpec extends AnyFunSuite {
         expr("cast(conv(substring(md5(cast(event_id as string)), 1, 4), 16, 10) as bigint) % 10 = 0"))
       .withColumn("batch", least(col("third") +
         when(col("straggler"), 1L).otherwise(0L), lit(2L))) // ONE batch late
-    val src = new java.io.File(s"$work/src"); src.mkdirs()
-    (0 to 2).foreach { b =>
-      val scratch = s"$work/.b$b"
-      StreamIngest.toJsonLines(
-        tagged.filter(col("batch") === b).select("us", "event_id"))
-        .coalesce(1).write.mode("overwrite").text(scratch)
-      val part = new java.io.File(scratch).listFiles()
-        .find(f => f.getName.startsWith("part-")).get
-      val dest = new java.io.File(src, f"b$b%d.txt")
-      java.nio.file.Files.move(part.toPath, dest.toPath)
-      dest.setLastModified(1700000000000L + b * 600000L)
-    }
-    val parsed = StreamIngest.parseEnvelope(
-      spark.readStream.format("text")
-        .option("maxFilesPerTrigger", "1")
-        .load(s"$work/src"),
-      StructType(Seq(StructField("us", LongType), StructField("event_id", LongType))))
+    val windows = StreamIngest.orderedFileStream(work,
+        (0 to 2).map(b => tagged.filter(col("batch") === b).select("us", "event_id")),
+        StructType(Seq(StructField("us", LongType), StructField("event_id", LongType))))
       .withColumn("ts", timestamp_micros(col("us")))
+      .withWatermark("ts", "7 days")
+      .groupBy(window(col("ts"), "1 day").as("wnd"))
+      .agg(count(lit(1)).as("n_accepted"))
+      .select(unix_micros(col("wnd.start")).as("day_us"), col("n_accepted"))
     graft.streaming.StreamMetrics.drainLog() // clear
-    StreamIngest.drain(spark) {
-      parsed
-        .withWatermark("ts", "7 days")
-        .groupBy(window(col("ts"), "1 day").as("wnd"))
-        .agg(count(lit(1)).as("n_accepted"))
-        .select(unix_micros(col("wnd.start")).as("day_us"), col("n_accepted"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          b.write.mode("append").parquet(s"$work/out")
-        }
-        .start()
+    StreamIngest.drain(windows, "append", s"$work/ckpt") {
+      (b, _) => b.write.mode("append").parquet(s"$work/out")
     }
     // append mode never emits the still-open trailing windows, so the
     // emitted total is ≤ corpus by construction; the DROP metric is the

@@ -25,16 +25,16 @@ class PipelineSpec extends AnyFunSuite {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.StringType)))
-    StreamIngest.ingestOnce(StreamIngest.jsonLinesStream(spark, src, schema), tbl, ckpt)
-    assert(spark.read.parquet(tbl).count() == 3)
+    StreamIngest.ingestOnceExactly(StreamIngest.jsonLinesStream(spark, src, schema), tbl, ckpt)
+    assert(StreamIngest.readExactlyOnceTable(spark, tbl).count() == 3)
     // replay with the same checkpoint: nothing new to process
-    StreamIngest.ingestOnce(StreamIngest.jsonLinesStream(spark, src, schema), tbl, ckpt)
-    assert(spark.read.parquet(tbl).count() == 3)
+    StreamIngest.ingestOnceExactly(StreamIngest.jsonLinesStream(spark, src, schema), tbl, ckpt)
+    assert(StreamIngest.readExactlyOnceTable(spark, tbl).count() == 3)
     // a NEW file arrives: only it is ingested on the next drain
     StreamIngest.toJsonLines(Seq((4L, "d")).toDF("id", "v"))
       .write.mode("append").text(src)
-    StreamIngest.ingestOnce(StreamIngest.jsonLinesStream(spark, src, schema), tbl, ckpt)
-    assert(spark.read.parquet(tbl).count() == 4)
+    StreamIngest.ingestOnceExactly(StreamIngest.jsonLinesStream(spark, src, schema), tbl, ckpt)
+    assert(StreamIngest.readExactlyOnceTable(spark, tbl).count() == 4)
   }
 
   test("stream-stream interval join: watermarked both sides, lookback pairs only, replay no-op") {
@@ -67,14 +67,14 @@ class PipelineSpec extends AnyFunSuite {
       case e: org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark => e
     }
     assert(watermarks.size == 2)
-    StreamIngest.ingestOnce(joined, tbl, ckpt)
-    val out = spark.read.parquet(tbl)
+    StreamIngest.ingestOnceExactly(joined, tbl, ckpt)
+    val out = StreamIngest.readExactlyOnceTable(spark, tbl)
     assert(out.count() == 1) // only the 10:06 view pairs with the click
     val r = out.select("click_id", "view_id", "user_id").head()
     assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((1L, 2L, 7L)))
     // replay with the same checkpoint: no duplicate pairs
-    StreamIngest.ingestOnce(joined, tbl, ckpt)
-    assert(spark.read.parquet(tbl).count() == 1)
+    StreamIngest.ingestOnceExactly(joined, tbl, ckpt)
+    assert(StreamIngest.readExactlyOnceTable(spark, tbl).count() == 1)
   }
 
   test("watermark-bounded streaming dedup: retried deliveries dropped, distinct keys kept") {
@@ -95,8 +95,8 @@ class PipelineSpec extends AnyFunSuite {
       .withColumn("ts", to_timestamp(col("ts")))
     val deduped = StreamIngest.dedupWithinWatermark(parsed, "ts", "1 hour", "id")
     assert(deduped.isStreaming)
-    StreamIngest.ingestOnce(deduped, tbl, ckpt)
-    val out = spark.read.parquet(tbl)
+    StreamIngest.ingestOnceExactly(deduped, tbl, ckpt)
+    val out = StreamIngest.readExactlyOnceTable(spark, tbl)
     assert(out.count() == 3)
     assert(out.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
   }

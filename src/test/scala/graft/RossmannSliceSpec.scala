@@ -112,9 +112,10 @@ class RossmannSliceSpec extends AnyFunSuite {
         (col("sales") * 1000L).as("y3"))
       .as[Obs]
 
-    // retrainOne: only the requested key is trained, and the result is
-    // identical to the weekly job's forecast for that key (same fit path)
-    val one = ForecastApi.retrainOne(series, "2|product_A")
+    // the retrain button (forecastNext, nDays = 7): only the requested
+    // key is trained, and the result is identical to the weekly job's
+    // forecast for that key (same fit path)
+    val one = ForecastApi.forecastNext(series, "2|product_A", 7)
     assert(one.select("key").distinct().as[String].collect().toSeq == Seq("2|product_A"))
     val weekly = series.groupByKey(_.key)
       .flatMapGroups((k: String, it: Iterator[Obs]) => Forecaster.forecastKey(k, it))

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -92,16 +91,11 @@ class SmallScanSpec extends AnyFunSuite {
       .write.parquet(s"$work/src")
     val schema = StructType(Seq(
       StructField("user_id", LongType), StructField("event_id", LongType)))
-    var q: StreamingQuery = null
-    StreamIngest.drain(spark) {
-      q = spark.readStream.schema(schema).parquet(s"$work/src")
-        .groupBy("user_id").agg(count(lit(1)).as("n"))
-        .writeStream.outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$work/ckpt")
-        .foreachBatch((b: DataFrame, _: Long) => b.write.mode("overwrite").parquet(s"$work/out"))
-        .start()
-      q
+    val q = StreamIngest.drain(
+        spark.readStream.schema(schema).parquet(s"$work/src")
+          .groupBy("user_id").agg(count(lit(1)).as("n")),
+        "complete", s"$work/ckpt") {
+      (b, _) => b.write.mode("overwrite").parquet(s"$work/out")
     }
     val ops = q.recentProgress.flatMap(_.stateOperators)
     assert(ops.nonEmpty)
@@ -120,21 +114,14 @@ class SmallScanSpec extends AnyFunSuite {
     val schema = StructType(Seq(
       StructField("user_id", LongType), StructField("event_id", LongType)))
     val bodyPlans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    var q: StreamingQuery = null
-    StreamIngest.drain(spark) {
-      q = spark.readStream.schema(schema).parquet(s"$work/src")
-        .join(Tables.customer(spark, sf)
-          .select(col("c_custkey").cast("long").as("user_id"), col("c_nationkey")), "user_id")
-        .writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$work/ckpt")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val perCustomer = Tables.orders(b.sparkSession, sf).groupBy("o_custkey").count()
-          bodyPlans.add(plan(perCustomer))
-          b.write.mode("overwrite").parquet(s"$work/out")
-        }
-        .start()
-      q
+    val q = StreamIngest.drain(
+        spark.readStream.schema(schema).parquet(s"$work/src")
+          .join(Tables.customer(spark, sf)
+            .select(col("c_custkey").cast("long").as("user_id"), col("c_nationkey")), "user_id"),
+        "append", s"$work/ckpt") { (b, _) =>
+      val perCustomer = Tables.orders(b.sparkSession, sf).groupBy("o_custkey").count()
+      bodyPlans.add(plan(perCustomer))
+      b.write.mode("overwrite").parquet(s"$work/out")
     }
     val batchPlan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
       .streamingQuery.lastExecution.executedPlan.toString
