@@ -385,13 +385,13 @@ object LifecycleOpsQueries {
     // construction (ADVICE r13): each micro-batch OVERWRITES its own
     // batch_id=N partition, so even a mid-append crash-then-retry
     // replaces its partial output instead of duplicating it. The drain
-    // is then REPLAYED against the same checkpoint and must append nothing —
-    // any duplication shifts every post-drain gate value and fails the
-    // oracle hash. Stage 2: the q552 decision re-evaluated on the
-    // pre-drain snapshot and on pre ∪ drained (each anchored to its
-    // own max-day), with a per-nation gate_changed flag — certifying
-    // that the drained batch actually moves the retrain decision
-    // through the declarative gate plan.
+    // is then REPLAYED against the same checkpoint and must read nothing
+    // (replayExactly fails the fixture otherwise). Stage 2: the q552
+    // decision re-evaluated on the pre-drain snapshot and on
+    // pre ∪ drained (each anchored to its own max-day), with a
+    // per-nation gate_changed flag — certifying that the drained batch
+    // actually moves the retrain decision through the declarative gate
+    // plan.
     "q570_ingest_gate_pipeline" -> ((s, dir) => {
       import org.apache.spark.sql.types.{LongType, StructField, StructType}
       val work = PipelineQueries.cachedFixture(s"q570|$dir") { work =>
@@ -417,8 +417,8 @@ object LifecycleOpsQueries {
           s, s"$work/src", env)
         graft.streaming.StreamIngest.ingestOnceExactly(
           parsed, s"$work/drained", s"$work/ckpt") // drain
-        graft.streaming.StreamIngest.ingestOnceExactly(
-          parsed, s"$work/drained", s"$work/ckpt") // replay: must be a no-op
+        graft.streaming.StreamIngest.replayExactly(
+          parsed, s"$work/drained", s"$work/ckpt")
       }
       val pre = retrainDecision(s.read.parquet(s"$work/pre"))
       val post = retrainDecision(s.read.parquet(s"$work/pre").unionByName(

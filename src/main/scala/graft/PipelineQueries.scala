@@ -59,16 +59,17 @@ object PipelineQueries {
     // → JSON-lines drop dir (producer envelope, X10 write half) →
     // file-stream parse → checkpointed exactly-once sink → REPLAY with
     // the same checkpoint (must ingest nothing) → read the table back and
-    // aggregate. Any replay duplication doubles the counts and fails the
-    // oracle, so exactly-once is what's verified. The drain+replay stage
-    // runs once per JVM (fixture memo) — at scale ingest is a continuous
-    // job and queries read the table it maintains.
+    // aggregate. The batch_id=0 overwrite would hide a replay that
+    // ignored the checkpoint, so replayExactly fails the fixture if the
+    // replay reads any input row. The drain+replay stage runs once per
+    // JVM (fixture memo) — at scale ingest is a continuous job and
+    // queries read the table it maintains.
     "q29_stream_ingest" -> ((s, dir) => {
       val work = cachedFixture(s"stream|$dir") { work =>
         val (src, tbl, ckpt) = (s"$work/src", s"$work/table", s"$work/ckpt")
         StreamIngest.eventLines(Tables.events(s, dir)).write.mode("overwrite").text(src)
         StreamIngest.ingestOnceExactly(StreamIngest.eventStream(s, src), tbl, ckpt) // drain
-        StreamIngest.ingestOnceExactly(StreamIngest.eventStream(s, src), tbl, ckpt) // replay: no-op
+        StreamIngest.replayExactly(StreamIngest.eventStream(s, src), tbl, ckpt)
       }
       StreamIngest.readExactlyOnceTable(s, s"$work/table")
         .groupBy("event_type")
@@ -350,8 +351,8 @@ object PipelineQueries {
     // REAL streaming job: click and view streams (same envelope source,
     // filtered) joined on user within a 5-minute lookback, drained with
     // AvailableNow into a parquet table, then REPLAYED with the same
-    // checkpoint (must emit nothing — any duplication doubles the pair
-    // counts and fails the oracle). Both sides are watermarked and the
+    // checkpoint (must read nothing — replayExactly fails the fixture
+    // otherwise). Both sides are watermarked and the
     // condition is time-bounded, so join state stays constant however
     // long the stream runs — the at-scale property that separates this
     // from a naive unbounded-state join. Per-user pair manifest with
@@ -366,7 +367,7 @@ object PipelineQueries {
           parsed.filter(col("event_type") === "click"),
           parsed.filter(col("event_type") === "view"))
         StreamIngest.ingestOnceExactly(joined, tbl, ckpt) // drain
-        StreamIngest.ingestOnceExactly(joined, tbl, ckpt) // replay: checkpoint => no-op
+        StreamIngest.replayExactly(joined, tbl, ckpt)
       }
       StreamIngest.readExactlyOnceTable(s, s"$work/table")
         .withColumn("gap_sec",

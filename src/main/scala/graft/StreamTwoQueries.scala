@@ -109,7 +109,7 @@ object StreamTwoQueries {
         val (src, tbl, ckpt) = (s"$work/src", s"$work/hist", s"$work/ckpt")
         StreamIngest.eventLines(Tables.events(s, dir).filter(col("value") > 0))
           .write.mode("overwrite").text(src)
-        val parsed = StreamIngest.eventStream(s, src)
+        val parsed = StreamIngest.jsonLinesStream(s, src, Schemas.eventsEnvelope)
           .withColumn("v6", expr("cast(round(value * 1000000) as bigint)"))
           .withColumn("bucket", (length(expr("bin(v6)")) - 1).cast(LongType))
         val hist = parsed.groupBy("bucket").agg(count(lit(1)).as("n"))

@@ -117,7 +117,9 @@ object StreamIngest {
     * [[StreamMetrics]], and state is released if no other streaming
     * query is live. Returns the finished query (its progress reports
     * stay readable). Every streaming query src/main starts goes
-    * through here — a bare `.start()` elsewhere reopens the race. */
+    * through here — a bare `.start()` elsewhere reopens the race. The
+    * one exception is [[kafkaWriter]], which returns its writer
+    * unstarted for a cluster with the Kafka connector to start. */
   def drain(stream: DataFrame, outputMode: String, checkpointDir: String)(
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val t0 = System.nanoTime()
@@ -173,9 +175,21 @@ object StreamIngest {
     * is the idempotent form a parquet table makes free. Blocks until
     * the drain completes. */
   def ingestOnceExactly(parsed: DataFrame, tableDir: String, checkpointDir: String): Unit =
-    drain(parsed, "append", checkpointDir) { (batch, batchId) =>
-      batch.write.mode("overwrite").parquet(s"$tableDir/batch_id=$batchId")
-    }
+    drain(parsed, "append", checkpointDir)(exactlyOnceSink(tableDir))
+
+  private def exactlyOnceSink(tableDir: String)(batch: DataFrame, batchId: Long): Unit =
+    batch.write.mode("overwrite").parquet(s"$tableDir/batch_id=$batchId")
+
+  /** Replay an [[ingestOnceExactly]] drain against the same checkpoint
+    * and fail if it read any input. The table cannot show a replay that
+    * ignored its checkpoint: that replay restarts at batch 0 and
+    * overwrites `batch_id=0` with the same rows. The drain's input row
+    * count can. */
+  def replayExactly(parsed: DataFrame, tableDir: String, checkpointDir: String): Unit = {
+    val rows = drain(parsed, "append", checkpointDir)(exactlyOnceSink(tableDir))
+      .recentProgress.map(_.numInputRows).sum
+    require(rows == 0, s"replay against checkpoint $checkpointDir read $rows rows")
+  }
 
   /** Read back a table written by [[ingestOnceExactly]] (drops the
     * partition-discovery batch_id column). */

@@ -27,14 +27,22 @@ class PipelineSpec extends AnyFunSuite {
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.StringType)))
     StreamIngest.ingestOnceExactly(StreamIngest.jsonLinesStream(spark, src, schema), tbl, ckpt)
     assert(StreamIngest.readExactlyOnceTable(spark, tbl).count() == 3)
-    // replay with the same checkpoint: nothing new to process
-    StreamIngest.ingestOnceExactly(StreamIngest.jsonLinesStream(spark, src, schema), tbl, ckpt)
+    // replay with the same checkpoint: nothing new to process. A replay
+    // that ignored the checkpoint would overwrite batch_id=0 with the
+    // same 3 rows, so the drain's input count is what must read 0.
+    StreamIngest.replayExactly(StreamIngest.jsonLinesStream(spark, src, schema), tbl, ckpt)
     assert(StreamIngest.readExactlyOnceTable(spark, tbl).count() == 3)
-    // a NEW file arrives: only it is ingested on the next drain
+    // ...and the check can fail: a fresh checkpoint re-reads all 3 rows
+    val e = intercept[IllegalArgumentException](StreamIngest.replayExactly(
+      StreamIngest.jsonLinesStream(spark, src, schema), s"$work/other", s"$work/ckpt2"))
+    assert(e.getMessage.contains("read 3 rows"))
+    // a NEW file arrives: only it is ingested on the next drain, as batch 1
     StreamIngest.toJsonLines(Seq((4L, "d")).toDF("id", "v"))
       .write.mode("append").text(src)
     StreamIngest.ingestOnceExactly(StreamIngest.jsonLinesStream(spark, src, schema), tbl, ckpt)
     assert(StreamIngest.readExactlyOnceTable(spark, tbl).count() == 4)
+    assert(spark.read.parquet(s"$tbl/batch_id=0").count() == 3)
+    assert(spark.read.parquet(s"$tbl/batch_id=1").count() == 1)
   }
 
   test("stream-stream interval join: watermarked both sides, lookback pairs only, replay no-op") {
@@ -72,8 +80,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(out.count() == 1) // only the 10:06 view pairs with the click
     val r = out.select("click_id", "view_id", "user_id").head()
     assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((1L, 2L, 7L)))
-    // replay with the same checkpoint: no duplicate pairs
-    StreamIngest.ingestOnceExactly(joined, tbl, ckpt)
+    // replay with the same checkpoint: reads no input, no duplicate pairs
+    StreamIngest.replayExactly(joined, tbl, ckpt)
     assert(StreamIngest.readExactlyOnceTable(spark, tbl).count() == 1)
   }
 
